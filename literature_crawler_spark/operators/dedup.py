@@ -317,19 +317,21 @@ def choose_jaccard_path(
       faster at t=0.5 — prefixes are half of every doc and there is no
       quadratic group to avoid).
 
-    The probe reads only the first ``stat_sample`` documents (an
-    early-stop scan, not a full pass) and aggregates their distinct
-    shingles — O(sample * shingles/doc) work regardless of corpus size.
+    The probe samples the ``stat_sample`` documents with the lowest
+    ``xxhash64(id)`` (a per-partition top-k, no shuffle of the corpus) and
+    aggregates their distinct shingles — O(sample * shingles/doc) work
+    past the scan. The sample is a function of the ids alone, so the same
+    corpus picks the same path however it is partitioned or ordered.
     Both candidates are EXACT, so dispatch never changes the output."""
     if threshold >= prefix_min_threshold:
         return "prefix"
     # persist the exploded sample so n_docs and max_df come from the SAME
-    # rows in one source scan — an unordered limit() re-executed across
-    # two jobs can sample different rows (and doubles the probe I/O)
+    # rows in one source scan (and the probe I/O is paid once)
+    sample = df.select(id_col, text_col).orderBy(
+        F.xxhash64(F.col(id_col)), F.col(id_col)
+    ).limit(stat_sample)
     sh = (
-        _with_shingle_hashes(
-            df.select(id_col, text_col).limit(stat_sample), text_col, shingle_n
-        )
+        _with_shingle_hashes(sample, text_col, shingle_n)
         .select(
             F.col(id_col).alias("_id"),
             F.explode(F.array_distinct("_sh")).alias("sh"),

@@ -21,6 +21,8 @@ AQE handles residual skew; the Bloom bitmap is per-bucket at real scale
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -217,11 +219,48 @@ def robots_rule_regex(pattern) -> F.Column:
     ).otherwise(wild)
 
 
-def apply_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
+class RobotsRules(NamedTuple):
+    """Robots rules prepared for matching (``prepare_robots``): per-host
+    rule arrays and the one-row array of global ``'*'`` rules."""
+
+    host_rules: DataFrame
+    global_rules: DataFrame
+
+    def persist(self) -> "RobotsRules":
+        return RobotsRules(self.host_rules.persist(), self.global_rules.persist())
+
+
+def prepare_robots(robots: DataFrame) -> RobotsRules:
+    """Translate (host, pattern, allow) rule rows into the arrays
+    ``mark_robots`` matches against: each pattern becomes a struct of its
+    anchored regex, its length and its verdict, grouped into one array per
+    host plus a single row holding every global ``'*'`` rule. The result
+    depends only on the rules, so a caller that applies the same rules
+    many times (the crawl engine, every wave) prepares and persists it
+    once."""
+    rules = robots.select(
+        "host",
+        F.struct(
+            robots_rule_regex(F.col("pattern")).alias("rx"),
+            F.length("pattern").alias("ln"),
+            F.col("allow").alias("allow"),
+        ).alias("r"),
+    )
+    host_rules = rules.filter(F.col("host") != "*").groupBy("host").agg(
+        F.collect_list("r").alias("_h_rules")
+    )
+    global_rules = rules.filter(F.col("host") == "*").agg(
+        F.collect_list("r").alias("_g_rules")
+    )
+    return RobotsRules(host_rules, global_rules)
+
+
+def apply_robots(candidates: DataFrame, robots: DataFrame | RobotsRules) -> DataFrame:
     """Keep candidates the robots rules allow, per RFC 9309 precedence:
     among all rules whose pattern matches the URL (host-specific rules of
     the candidate's host + global ``'*'`` rules), the LONGEST pattern wins;
     on a length tie Allow beats Disallow; no match means allowed.
+    ``robots`` is the raw rule table or its ``prepare_robots`` form.
 
     Scale shape: rules are grouped per host into an array column and
     broadcast, so host-specific rules reach candidates through a broadcast
@@ -240,7 +279,9 @@ def apply_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
 
 
 def mark_robots(
-    candidates: DataFrame, robots: DataFrame, flag_col: str = "robots_allowed"
+    candidates: DataFrame,
+    robots: DataFrame | RobotsRules,
+    flag_col: str = "robots_allowed",
 ) -> DataFrame:
     """``apply_robots`` as a MARKING pass: same RFC 9309 precedence and
     broadcast plan shape, but every candidate row survives with a boolean
@@ -250,22 +291,9 @@ def mark_robots(
     the merged crawl_canonicalize_counts entry's shape, and generally
     cheaper than running the filter variant as a second pass over the
     same candidates."""
-    rules = robots.select(
-        "host",
-        F.struct(
-            robots_rule_regex(F.col("pattern")).alias("rx"),
-            F.length("pattern").alias("ln"),
-            F.col("allow").alias("allow"),
-        ).alias("r"),
-    )
-    host_rules = rules.filter(F.col("host") != "*").groupBy("host").agg(
-        F.collect_list("r").alias("_h_rules")
-    )
-    global_rules = rules.filter(F.col("host") == "*").agg(
-        F.collect_list("r").alias("_g_rules")
-    )
-    out = candidates.join(F.broadcast(host_rules), "host", "left").crossJoin(
-        F.broadcast(global_rules)
+    rules = robots if isinstance(robots, RobotsRules) else prepare_robots(robots)
+    out = candidates.join(F.broadcast(rules.host_rules), "host", "left").crossJoin(
+        F.broadcast(rules.global_rules)
     )
     empty = F.slice(F.col("_g_rules"), 1, 0)
     all_rules = F.concat(F.coalesce(F.col("_h_rules"), empty), F.col("_g_rules"))

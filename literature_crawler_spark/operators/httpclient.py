@@ -85,7 +85,7 @@ def _decode_body(body: bytes, charset: str | None) -> str:
         return body.decode("utf-8", errors="replace")
 
 
-_HREF_RE = re.compile(r"""<a\s[^>]*href\s*=\s*["']([^"'#]+)["']""", re.I)
+_HREF_RE = re.compile(r"""<a\s[^>]*href\s*=\s*["']([^"']+)["']""", re.I)
 _TITLE_RE = re.compile(r"<title[^>]*>(.*?)</title>", re.I | re.S)
 _OG_IMAGE_RE = re.compile(
     r"""<meta\s[^>]*property\s*=\s*["']og:image["'][^>]*content\s*=\s*["']([^"']+)["']""",
@@ -98,12 +98,15 @@ def parse_fetch_page(body: bytes, url: str, charset: str | None) -> dict:
     caption, absolute-ized <a href> targets as the outlinks, og:image as
     the image id. Site-specific extracts replace this parse, not the
     transport (pass ``parse=`` to ``make_urllib_fetcher``)."""
-    from urllib.parse import urljoin
+    from urllib.parse import urldefrag, urljoin
 
     text = _decode_body(body, charset)
     title = _TITLE_RE.search(text)
     og = _OG_IMAGE_RE.search(text)
-    links = [urljoin(url, h) for h in _HREF_RE.findall(text)]
+    # the fragment names a spot inside the target page, not another page:
+    # '/page#sec' links to '/page', and a bare '#sec' links nowhere new
+    hrefs = (urldefrag(h).url for h in _HREF_RE.findall(text))
+    links = [urljoin(url, h) for h in hrefs if h]
     return {
         "status": "fetched",
         "image_id": urljoin(url, og.group(1)) if og else None,

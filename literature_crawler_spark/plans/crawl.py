@@ -110,8 +110,17 @@ class CrawlEngine:
     ) -> None:
         self.spark = spark
         self.store = store
-        self.robots = robots
-        self.politeness = politeness
+        # Static inputs are planned once and persisted lazily (the first
+        # wave or bootstrap fills the cache): every wave reads them, and
+        # recomputing them per wave costs Python tasks (a robots or
+        # politeness table built from a Python list), a Parquet decode of
+        # the pages and the robots regex translation. They are snapshots
+        # of the inputs as given: refreshed robots rules need a new engine.
+        self.robots = None if robots is None else fr.prepare_robots(robots).persist()
+        self.politeness = (
+            None if politeness is None
+            else politeness.select("host", "budget_per_wave").persist()
+        )
         self.default_budget = default_budget
         self.n_buckets = n_buckets
         # fold the frontier's merge-delta chain back into a replace base
@@ -212,7 +221,7 @@ class CrawlEngine:
             "links",
             "caption",
             "image_id",
-        )
+        ).persist()
 
     # ------------------------------------------------------------ state ----
     def _refresh_adopted_store(self, seen_latest: dict) -> None:
@@ -527,11 +536,14 @@ class CrawlEngine:
 
         # 3. extract + canonicalize candidate links (posexplode keeps the
         #    in-document order the first-seen dedup needs — A4 semantics)
+        #    coalesced (narrow, no shuffle) to at most one partition per
+        #    core: the kernel below is a Python task per partition, and each
+        #    one has a fixed start-up cost far above its per-row work
         links = fetched.filter(F.col("page_url").isNotNull()).select(
             F.col("seq").alias("parent_seq"),
             F.col("page_host").alias("base_host"),
             F.posexplode("links").alias("pos", "link"),
-        )
+        ).coalesce(self.spark.sparkContext.defaultParallelism)
         # auto-upgrade: once the committed seen set outgrows the broadcast
         # anti-join (fr.BROADCAST_SEEN_MAX keys), 'auto' switches from
         # per-wave plans to a MAINTAINED cuckoo store — the measured-best
@@ -672,11 +684,16 @@ class CrawlEngine:
             "missing": n_scheduled - n_fetched, "new_urls": n_new,
             "pending_next": n_pending_next, "done": n_pending_next == 0,
         }
+        # one row built on the JVM: a createDataFrame from a Python list
+        # would run a Python task per default partition to write one row
         self.store.commit(
             "metrics",
-            self.spark.createDataFrame(
-                [(wave, n_scheduled, n_fetched, n_new, n_pending_next)],
-                "wave int, scheduled long, fetched long, new_urls long, pending_next long",
+            self.spark.range(1, numPartitions=1).select(
+                F.lit(wave).cast("int").alias("wave"),
+                F.lit(n_scheduled).cast("long").alias("scheduled"),
+                F.lit(n_fetched).cast("long").alias("fetched"),
+                F.lit(n_new).cast("long").alias("new_urls"),
+                F.lit(n_pending_next).cast("long").alias("pending_next"),
             ),
             mode="append", wave=wave,
         )

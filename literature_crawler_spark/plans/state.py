@@ -36,12 +36,19 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class SnapshotStore:
     def __init__(self, root: str) -> None:
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # table -> schema of this store's last commit to it, in memory
+        # only: a read passes it to the Parquet reader instead of paying a
+        # schema-inference job over the snapshot files (the reader makes
+        # every field nullable, as inference would). Tables not yet
+        # committed through this instance (a resumed run) are inferred.
+        self._schemas: dict[str, StructType] = {}
 
     # ------------------------------------------------------------ paths ----
     def _tdir(self, table: str) -> str:
@@ -97,6 +104,7 @@ class SnapshotStore:
         sid = (prev["id"] + 1) if prev else 0
         data_dir = self._sdir(table, sid)
         df.write.mode("overwrite").parquet(data_dir)
+        self._schemas[table] = df.schema
         manifest = {
             "id": sid,
             "table": table,
@@ -114,6 +122,11 @@ class SnapshotStore:
             f.write(str(sid))
         os.replace(tmp, os.path.join(self._tdir(table), "_LATEST"))
         return sid
+
+    def _parquet(self, spark: SparkSession, table: str, *dirs: str) -> DataFrame:
+        schema = self._schemas.get(table)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*dirs)
 
     # ------------------------------------------------------------- read ----
     def read(self, spark: SparkSession, table: str, snapshot_id: int | None = None) -> DataFrame | None:
@@ -142,7 +155,7 @@ class SnapshotStore:
             return None
         head = upto[-1]
         if head["mode"] == "replace":
-            return spark.read.parquet(self._sdir(table, head["id"]))
+            return self._parquet(spark, table, self._sdir(table, head["id"]))
         if head["mode"] == "merge":
             return self._read_merged(spark, table, upto)
         # append head: union the last replace base (if any — compaction or
@@ -163,7 +176,7 @@ class SnapshotStore:
                 f"table {table}: merge snapshots cannot mix with an append head"
             )
         dirs = [self._sdir(table, m["id"]) for m in tail]
-        return spark.read.parquet(*dirs)
+        return self._parquet(spark, table, *dirs)
 
     def _read_merged(self, spark: SparkSession, table: str, upto: list[dict]) -> DataFrame:
         """Reconcile base replace + merge deltas: per merge_key, the row
@@ -182,7 +195,7 @@ class SnapshotStore:
                     f"table {table}: append snapshots cannot mix with merge"
                 )
             parts.append(
-                spark.read.parquet(self._sdir(table, m["id"])).withColumn(
+                self._parquet(spark, table, self._sdir(table, m["id"])).withColumn(
                     "_sid", F.lit(m["id"])
                 )
             )
@@ -262,27 +275,32 @@ class SnapshotStore:
             except OSError:
                 pass
             shutil.rmtree(self._sdir(table, sid), ignore_errors=True)
-        # sweep orphans: a prior crash inside the window above leaves a
-        # manifest-less data dir that snapshots() can no longer see —
-        # reclaim any below the cut so a re-run completes the expiry
+        self._sweep_orphans(table, lambda sid: sid < cut)
+        return expired
+
+    def _sweep_orphans(self, table: str, doomed) -> None:
+        """Remove manifest-less data dirs whose id ``doomed(id)`` selects.
+        Expiry and rollback delete a snapshot's manifest before its data
+        dir, so a crash between the two leaves a dir that snapshots() no
+        longer sees; re-running either call reclaims it here."""
         try:
             entries = os.listdir(self._tdir(table))
         except OSError:
-            entries = []
+            return
         live = {f"s{m['id']:06d}" for m in self.snapshots(table)}
         for name in entries:
             if (
                 name.startswith("s")
                 and not name.endswith(".json")
                 and name[1:].isdigit()
-                and int(name[1:]) < cut
+                and doomed(int(name[1:]))
                 and name not in live
             ):
                 shutil.rmtree(os.path.join(self._tdir(table), name), ignore_errors=True)
-        return expired
 
     def drop(self, table: str) -> None:
         shutil.rmtree(self._tdir(table), ignore_errors=True)
+        self._schemas.pop(table, None)
 
     def truncate_after(self, table: str, snapshot_id: int) -> None:
         """Roll back to ``snapshot_id`` (crash-recovery / testing aid)."""
@@ -290,6 +308,9 @@ class SnapshotStore:
             if m["id"] > snapshot_id:
                 os.remove(self._manifest_path(table, m["id"]))
                 shutil.rmtree(self._sdir(table, m["id"]), ignore_errors=True)
+        self._sweep_orphans(table, lambda sid: sid > snapshot_id)
+        # a rolled-back commit may have changed the schema
+        self._schemas.pop(table, None)
         tmp = os.path.join(self._tdir(table), "_LATEST.tmp")
         with open(tmp, "w") as f:
             f.write(str(snapshot_id))

@@ -345,6 +345,40 @@ def test_jaccard_dispatch_picks_measured_winner(spark):
     assert dedup.choose_jaccard_path(boiler, "text", "doc_id", threshold=0.5) == "prefix"
 
 
+def test_jaccard_dispatch_ignores_partitioning(spark):
+    """The crossover probe samples documents by id hash, so a corpus that
+    is borderline for the sample (clean docs on one side of the id range,
+    boilerplate on the other) picks the same path in every partitioning
+    and row order of the same rows."""
+    clean = _clean_corpus(spark, n_docs=60)
+    boiler = spark.createDataFrame(
+        [
+            (
+                100 + i,
+                "shared boilerplate license header text "
+                + " ".join(f"u{i}t{j}z" for j in range(20)),
+            )
+            for i in range(60)
+        ],
+        ["doc_id", "text"],
+    )
+    corpus = clean.unionByName(boiler)
+
+    def pick(df):
+        return dedup.choose_jaccard_path(
+            df, "text", "doc_id", threshold=0.5, stat_sample=30
+        )
+
+    want = pick(corpus)
+    copies = [
+        corpus.orderBy("doc_id").coalesce(1),
+        corpus.orderBy(F.col("doc_id").desc()).coalesce(1),
+        corpus.repartition(7, "doc_id"),
+        corpus.repartition(3),
+    ]
+    assert [pick(c) for c in copies] == [want] * len(copies)
+
+
 def test_jaccard_auto_output_identical_on_both_paths(spark):
     """Dispatch never changes rows: auto == prefix == brute on a corpus
     with injected near-dups, at a threshold for each dispatch branch."""

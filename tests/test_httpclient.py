@@ -47,6 +47,14 @@ class _Handler(BaseHTTPRequestHandler):
                 b'<a href="http://other.example/x">x</a></body></html>'
             )
             self._ok(body, ctype="text/html; charset=utf-8")
+        elif p == "/anchors":
+            body = (
+                b'<html><body><a href="/page/sec#intro">s</a>'
+                b'<a href="#top">top</a>'
+                b"<a href='http://other.example/y#z'>y</a>"
+                b'<a href="/page/next">n</a></body></html>'
+            )
+            self._ok(body, ctype="text/html")
         elif p == "/flaky":
             if n < 3:  # two 503s, then success
                 self.send_error(503)
@@ -119,6 +127,20 @@ def test_urllib_fetcher_through_fetch_extract(spark, httpd):
     assert by[2].fetch_status == "denied"
     assert by[3].fetch_status == "fetched" and by[3].attempts == 3
     assert by[4].fetch_status == "error" and by[4].attempts == 3
+
+
+def test_fragment_hrefs_keep_their_outlink(spark, httpd):
+    """An href with a #fragment links to the page without it; a bare
+    in-page anchor is not an outlink."""
+    base = f"http://{httpd}"
+    sched = spark.createDataFrame(
+        [(0, f"{base}/anchors", 0)], "page_index int, canon_url string, salt int"
+    )
+    (row,) = fe.fetch_extract(sched, hc.make_urllib_fetcher(timeout=10)).collect()
+    assert row.fetch_status == "fetched"
+    assert list(row.links) == [
+        f"{base}/page/sec", "http://other.example/y", f"{base}/page/next",
+    ]
 
 
 def test_urllib_downloader_through_download_binaries(spark, httpd):

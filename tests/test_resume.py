@@ -374,6 +374,42 @@ def test_expire_crash_window_leaves_no_orphan_manifest(spark, tmp_path, monkeypa
     assert not os.path.exists(store._sdir("t", s1))
 
 
+def test_truncate_crash_window_reclaims_orphan_dir(spark, tmp_path, monkeypatch):
+    """A crash between a rolled-back snapshot's two deletes (manifest
+    gone, data dir left) leaves an orphan dir above the rollback point;
+    re-running the rollback reclaims it through the same orphan sweep
+    expire_snapshots uses."""
+    import os
+    import shutil as _shutil
+
+    from literature_crawler_spark.plans import state as state_mod
+
+    store = SnapshotStore(str(tmp_path / "trc"))
+    df = lambda lo, hi: spark.range(lo, hi).withColumnRenamed("id", "k")  # noqa: E731
+    s0 = store.commit("t", df(0, 10), mode="append")
+    s1 = store.commit("t", df(10, 20), mode="append")
+    s2 = store.commit("t", df(20, 30), mode="append")
+
+    real_rmtree = _shutil.rmtree
+
+    def crash(path, *a, **kw):
+        raise RuntimeError("simulated crash mid-rollback")
+
+    monkeypatch.setattr(state_mod.shutil, "rmtree", crash)
+    with pytest.raises(RuntimeError):
+        store.truncate_after("t", s0)
+    monkeypatch.setattr(state_mod.shutil, "rmtree", real_rmtree)
+    # s1's manifest went first: its data dir is now invisible to snapshots()
+    assert os.path.isdir(store._sdir("t", s1))
+    assert all(m["id"] != s1 for m in store.snapshots("t"))
+
+    store.truncate_after("t", s0)
+    assert not os.path.exists(store._sdir("t", s1))
+    assert not os.path.exists(store._sdir("t", s2))
+    assert store.latest("t")["id"] == s0
+    assert {r.k for r in store.read(spark, "t").collect()} == set(range(10))
+
+
 def test_expire_snapshots_noop_without_base(spark, tmp_path):
     store = SnapshotStore(str(tmp_path / "exp2"))
     store.commit("t", spark.range(5), mode="append")

@@ -187,6 +187,11 @@ def test_apply_robots_wildcards_and_precedence(spark):
     marked = fr.mark_robots(cand, robots, "ok").collect()
     assert len(marked) == cand.count()
     assert {r.canon_url for r in marked if r.ok} == kept
+    # both accept the rules prepared once (the crawl engine's form)
+    rules = fr.prepare_robots(robots)
+    assert {r.canon_url for r in fr.apply_robots(cand, rules).collect()} == kept
+    marked = fr.mark_robots(cand, rules, "ok").collect()
+    assert {r.canon_url for r in marked if r.ok} == kept
 
 
 def test_apply_robots_scale_plan(spark):
