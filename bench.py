@@ -715,17 +715,28 @@ def main() -> None:
             if isinstance(v, dict) and "picked" in v
         }
     compact["full_detail"] = "BENCH_FULL.json"
-    # the driver records only a ~2000-char stdout TAIL; a longer line
-    # loses its HEAD (the '{"metric"' prefix) and the whole round's bench
-    # record fails to parse — slim progressively until it fits
+    print(slim_stdout_line(compact))
+
+
+# a reader that keeps only a ~2000-char stdout TAIL loses a longer line's
+# HEAD (the '{"metric"' prefix), and the bench record fails to parse
+STDOUT_LINE_MAX = 1900
+
+
+def slim_stdout_line(compact: dict) -> str:
+    """The bench's one stdout JSON line, slimmed in stages until it is at
+    most STDOUT_LINE_MAX chars: Jaccard dispatch down to its pick, then
+    host calibration down to two fields, and as a last resort only the
+    headline metric with a pointer to ``full_detail``."""
+    compact = dict(compact)
     line = json.dumps(compact)
-    if len(line) > 1900 and compact.get("jaccard_dispatch"):
+    if len(line) > STDOUT_LINE_MAX and compact.get("jaccard_dispatch"):
         compact["jaccard_dispatch"] = {
             k: {"picked": v["picked"], "picked_winner": v["picked_winner"]}
             for k, v in compact["jaccard_dispatch"].items()
         }
         line = json.dumps(compact)
-    if len(line) > 1900:
+    if len(line) > STDOUT_LINE_MAX and isinstance(compact.get("host_calibration"), dict):
         hc = compact["host_calibration"]
         compact["host_calibration"] = {
             k: hc[k]
@@ -733,7 +744,12 @@ def main() -> None:
             if k in hc
         }
         line = json.dumps(compact)
-    print(line)
+    if len(line) > STDOUT_LINE_MAX:
+        line = json.dumps({
+            k: compact[k] for k in ("metric", "value", "unit", "full_detail")
+            if k in compact
+        })
+    return line
 
 
 if __name__ == "__main__":

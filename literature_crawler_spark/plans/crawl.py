@@ -5,13 +5,22 @@ re-expressed as one DataFrame pass):
 
     frontier(pending) -> politeness rank (per-host quota) -> fetch
     (join against the pages corpus) -> extract links (explode) ->
-    canonicalize -> robots filter -> first-seen dedup -> Bloom+anti-join
-    vs seen -> assign dense seq -> commit snapshots (frontier, seen,
-    order, outcomes, metrics)
+    canonicalize -> first-seen dedup -> membership test vs seen ->
+    robots filter -> assign dense seq -> commit snapshots (frontier,
+    seen, order, outcomes, metrics, lineage)
 
-Every wave ends in atomic snapshot commits, so a killed run resumes from
-the latest committed wave (reference analogue: frozen Redis
-``crawl_list_{task}`` reload, ``nature_protocol_crawl.py:67-88``).
+The stages that later jobs read more than once (scheduled, fetched, the
+deduplicated candidates, the seq partitioning and the new frontier rows)
+end in eager ``localCheckpoint`` fences, so each later action plans from
+a leaf scan rather than the whole wave's lineage.
+
+Each snapshot commit is atomic per table, not per wave: a wave writes its
+tables one after another, so a run killed between two of them resumes
+with some tables a wave ahead. Resume continues from the latest committed
+frontier, and ``CrawlEngine._reconcile_crash_window`` heals the one window
+that matters for correctness, a frontier commit whose seen commit is
+missing (reference analogue: frozen Redis ``crawl_list_{task}`` reload,
+``nature_protocol_crawl.py:67-88``).
 
 Determinism contract (shared with oracle.crawl_oracle): seq is a dense
 global counter; new URLs are numbered in (parent_seq, link_pos) order;
@@ -44,7 +53,6 @@ def assign_global_seq(
     order_cols: list[str],
     start: int,
     return_count: bool = False,
-    released: list | None = None,
 ) -> DataFrame | tuple[DataFrame, int]:
     """Dense global sequence numbers in (order_cols) order, two-phase:
 
@@ -59,18 +67,16 @@ def assign_global_seq(
 
     ``return_count=True`` also returns the total row count — it falls out
     of the offset map for free, so callers need no separate count() pass.
-    ``released``: when given, the repartitioned input is persisted (the
-    counts pass and the downstream consumers then share one
-    materialization of the upstream pipeline) and the handle appended for
-    the caller to unpersist.
+    The repartitioned input is fenced with an eager ``localCheckpoint``:
+    the counts pass and every consumer of the result read that one
+    materialization and plan from it, not from the input's lineage.
     """
     n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    parts = df.repartitionByRange(n_parts, *order_cols).withColumn(
-        "_pid", F.spark_partition_id()
+    parts = (
+        df.repartitionByRange(n_parts, *order_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
-    if released is not None:
-        parts = parts.persist()
-        released.append(parts)
     counts = {r["_pid"]: r["cnt"] for r in parts.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
     offsets, acc = {}, start
     for pid in sorted(counts):
@@ -210,10 +216,6 @@ class CrawlEngine:
         # never O(all hosts).
         self.two_phase = two_phase
         self._hot_backlog: dict[str, int] = {}
-        # dense-seq high-water mark, carried across waves so run_wave
-        # never re-scans the frontier for max(seq); None = recompute on
-        # the next wave (fresh engine / resume).
-        self._max_seq: int | None = None
         # the fetchable web: canonical url -> (host, links, caption, image_id)
         self.pages = pages.select(
             F.col("url").alias("page_url"),
@@ -378,10 +380,13 @@ class CrawlEngine:
             n_requeued = flip.count()
             prev_meta = (self.store.latest("frontier") or {}).get("meta", {})
             pending = prev_meta.get("pending", 0) + n_requeued
+            # a requeue flips statuses only: the seq high-water is unchanged
+            meta = {"pending": pending, "delta_rows": n_requeued}
+            if "max_seq" in prev_meta:
+                meta["max_seq"] = prev_meta["max_seq"]
             self.store.commit(
                 "frontier", flip, mode="merge", wave=self.last_wave(),
-                meta={"pending": pending, "delta_rows": n_requeued},
-                merge_key=["url_hash"],
+                meta=meta, merge_key=["url_hash"],
             )
             flip.unpersist()
             keys.unpersist()
@@ -423,16 +428,13 @@ class CrawlEngine:
 
     # -------------------------------------------------------- bootstrap ----
     def bootstrap(self, seeds: DataFrame) -> int:
-        """Wave 0: canonicalize + robots-filter + first-seen-dedup the seed
+        """Wave 0: canonicalize + first-seen-dedup + robots-filter the seed
         list, number it densely, commit as the initial pending frontier."""
         cand = fr.canonicalize_candidates(seeds.select(F.col("url"), F.col("seq").alias("seed_seq")))
+        cand = fr.first_seen_dedup(cand, ["seed_seq"])
         if self.robots is not None:
             cand = fr.apply_robots(cand, self.robots)
-        cand = fr.first_seen_dedup(cand, ["seed_seq"])
-        released: list[DataFrame] = []
-        cand, n = assign_global_seq(
-            cand, ["seed_seq"], start=0, return_count=True, released=released
-        )
+        cand, n = assign_global_seq(cand, ["seed_seq"], start=0, return_count=True)
         frontier0 = cand.select(
             "canon_url", "url_hash", "bucket", "host",
             F.lit(0).alias("priority"), "seq",
@@ -440,7 +442,7 @@ class CrawlEngine:
         )
         self.store.commit(
             "frontier", frontier0, mode="replace", wave=0,
-            meta={"pending": n, "total": n},
+            meta={"pending": n, "total": n, "max_seq": n - 1},
         )
         if self._bloom_store is not None:  # superset invariant: bloom first
             self._store_merge(frontier0.select("url_hash"))
@@ -451,9 +453,6 @@ class CrawlEngine:
         )
         if self._bloom_store is not None:
             self._bloom_store.set_watermark(sid)
-        for h in released:
-            h.unpersist()
-        self._max_seq = n - 1
         return n
 
     # ------------------------------------------------------------- wave ----
@@ -469,7 +468,7 @@ class CrawlEngine:
         Hosts gaining more than one budget of NEW pending URLs in a wave
         net-grow (they drain at most budget/wave), so only those enter the
         dict; every tracked host is drained by budget each wave and
-        evicted at zero. One tiny job over the already-cached new_rows.
+        evicted at zero. One tiny job over the fenced new_rows.
         """
         budget = self.default_budget
         for h in list(self._hot_backlog):
@@ -494,26 +493,33 @@ class CrawlEngine:
 
         frontier = self.frontier()
         pending = frontier.filter(F.col("status") == "pending")
+        prev_meta = (self.store.latest("frontier") or {}).get("meta", {})
+
+        # Every stage below that later jobs read more than once ends in an
+        # eager localCheckpoint fence: the stage runs once, and each later
+        # action plans from the fence's leaf scan instead of re-planning
+        # the wave's whole lineage (and matching it against every cached
+        # plan), which otherwise costs more driver time than the jobs run.
+        # A fence's rows live on the executors only, so a lost executor
+        # fails the wave; run() then resumes from the last committed
+        # snapshot, as after any crash. A count the wave needs rides an
+        # Observation on the fence's own job.
 
         # 1. politeness: per-host quota ranking (one shuffle on host);
         #    two_phase='auto' engages the supernode pre-rank only when a
         #    tracked host's backlog estimate crosses the ratio cut
+        obs_sched = Observation()
         scheduled = pol.schedule_wave(
             pending, self.politeness, self.default_budget,
             two_phase=self._use_two_phase(),
-        )
-        scheduled = scheduled.persist()
-        n_scheduled = scheduled.count()  # driver action 1 (early-exit gate)
+        ).observe(obs_sched, F.count("*").alias("n")).localCheckpoint(eager=True)
+        n_scheduled = int(obs_sched.get["n"])  # early-exit gate
         if n_scheduled == 0:
-            scheduled.unpersist()
             return {"wave": wave, "scheduled": 0, "done": True}
 
         # 2. fetch: either the Arrow-UDF fetcher over salt-spread partitions
         #    (live deploy path) or a hash-join vs the pages corpus table
         #    (cheaper when the "web" is itself a table, as in tests/bench).
-        #    n_fetched rides an Observation — collected as a side effect of
-        #    the frontier commit instead of its own count() action
-        #    (VERDICT r02 item 6).
         obs = Observation()
         if self.fetcher is not None:
             from literature_crawler_spark.operators import fetch as fetch_mod
@@ -532,7 +538,8 @@ class CrawlEngine:
             )
         fetched = fetched.observe(
             obs, F.count(F.col("page_url")).alias("n_fetched")
-        ).persist()
+        ).localCheckpoint(eager=True)
+        n_fetched = int(obs.get["n_fetched"])
 
         # 3. extract + canonicalize candidate links (posexplode keeps the
         #    in-document order the first-seen dedup needs — A4 semantics)
@@ -578,41 +585,40 @@ class CrawlEngine:
             links.withColumnRenamed("link", "url"), base_host_col="base_host",
             probe_store=self._bloom_store,
         )
-        if self.robots is not None:
-            cand = fr.apply_robots(cand, self.robots)
         cand = fr.first_seen_dedup(cand, ["parent_seq", "pos"])
 
-        # 4. membership test: Bloom prefilter + exact anti-join vs seen.
-        #    released collects every cache this wave creates (Bloom-probe
-        #    materialization, seq-assignment repartition) so nothing
-        #    strands across waves.
-        released: list[DataFrame] = []
+        # 4. membership test: Bloom prefilter + exact anti-join vs seen
         seen = self.seen()
         new = fr.dedup_against_seen(
             self.spark, cand, seen,
             use_bloom=True if self._bloom_store is not None else self.use_bloom,
             expected_seen=(seen_meta or {}).get("meta", {}).get("total"),
             bloom_store=self._bloom_store,
-            released=released,
         )
+        # robots last: its verdict depends only on (host, canon_url), so
+        # filtering after both dedups keeps the same rows and matches each
+        # candidate URL once, not once per duplicate or already-seen hit.
+        # The fence makes the range partitioning's sample below read these
+        # rows instead of re-running the canonicalize kernel.
+        if self.robots is not None:
+            new = fr.apply_robots(new, self.robots)
+        new = new.localCheckpoint(eager=True)
 
         # 5. dense numbering in (parent_seq, pos) order. The high-water
-        #    seq is carried across waves (one frontier agg only on the
-        #    first wave after engine start / resume), and n_new falls out
-        #    of the numbering's offset map — no count() pass.
-        if self._max_seq is None:
-            self._max_seq = frontier.agg(F.max("seq")).collect()[0][0] or 0
-        max_seq = self._max_seq
+        #    seq rides every frontier manifest (a resumed engine reads it
+        #    too), and n_new falls out of the numbering's offset map — no
+        #    count() pass.
+        max_seq = prev_meta.get("max_seq")
+        if max_seq is None:  # a store written before the field
+            max_seq = self._scan_max_seq(frontier)
         new, n_new = assign_global_seq(
-            new, ["parent_seq", "pos"], start=max_seq + 1,
-            return_count=True, released=released,
+            new, ["parent_seq", "pos"], start=max_seq + 1, return_count=True
         )
-        self._max_seq = max_seq + n_new
         new_rows = new.select(
             "canon_url", "url_hash", "bucket", "host",
             F.lit(wave).alias("priority"), "seq",
             F.lit(wave).alias("wave"), F.lit("pending").alias("status"),
-        ).persist()
+        ).localCheckpoint(eager=True)
 
         # 6. commit snapshots: frontier (MERGE delta: only the status flips
         #    of scheduled rows + newly discovered rows — O(scheduled + new)
@@ -629,14 +635,16 @@ class CrawlEngine:
         # pending-before comes from the previous frontier commit's meta
         # (bootstrap and every merge write it) — no frontier re-scan; the
         # count() fallback only fires on stores written before this field.
-        prev_meta = (self.store.latest("frontier") or {}).get("meta", {})
         pending_before = prev_meta.get("pending")
         if pending_before is None:
             pending_before = pending.count()
         n_pending_next = n_new + (pending_before - n_scheduled)
         self.store.commit(
             "frontier", frontier_delta, mode="merge", wave=wave,
-            meta={"pending": n_pending_next, "delta_rows": n_scheduled + n_new},
+            meta={
+                "pending": n_pending_next, "delta_rows": n_scheduled + n_new,
+                "max_seq": max_seq + n_new,
+            },
             merge_key=["url_hash"],
         )
         if self.compact_every and wave % self.compact_every == 0:
@@ -645,9 +653,6 @@ class CrawlEngine:
                 # expire-snapshots): without this, a long crawl's frontier
                 # storage grows by a full table copy per compaction
                 self.store.expire_snapshots("frontier")
-        # the frontier merge commit above scanned `fetched`, so the
-        # observation is already resolved — this get() does not block
-        n_fetched = int(obs.get["n_fetched"])
         seen_total = ((seen_meta or {}).get("meta", {}).get("total") or 0) + n_new
         if self._bloom_store is not None and n_new:  # bloom BEFORE seen commit
             self._store_merge(new_rows.select("url_hash"))
@@ -720,12 +725,13 @@ class CrawlEngine:
         )
         if self.two_phase == "auto":
             self._update_hot_backlog(new_rows, n_new)
-        scheduled.unpersist()
-        fetched.unpersist()
-        new_rows.unpersist()
-        for h in released:
-            h.unpersist()
         return metrics
+
+    @staticmethod
+    def _scan_max_seq(frontier: DataFrame) -> int:
+        """Highest seq in the frontier: a full scan, only for stores whose
+        frontier manifests predate the ``max_seq`` meta field."""
+        return frontier.agg(F.max("seq")).collect()[0][0] or 0
 
     # -------------------------------------------------------------- run ----
     def _reconcile_crash_window(self) -> int:

@@ -155,10 +155,7 @@ def test_minhash_signature_empty_doc(spark):
     assert sigs[2] == [hashing._MERSENNE31] * 8
 
 
-def test_store_leg_divergence_flag():
-    """bench.py's in-artifact sanity flag (VERDICT r4 item 8): the two
-    maintained-store legs run the same kernel on the same input, so a
-    >3x throughput gap marks a contaminated leg."""
+def _load_bench():
     import importlib.util
     import os
 
@@ -167,6 +164,14 @@ def test_store_leg_divergence_flag():
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
+    return bench
+
+
+def test_store_leg_divergence_flag():
+    """bench.py's in-artifact sanity flag (VERDICT r4 item 8): the two
+    maintained-store legs run the same kernel on the same input, so a
+    >3x throughput gap marks a contaminated leg."""
+    bench = _load_bench()
 
     ok = bench.store_leg_divergence(3_180_000, 2_590_000)
     assert ok == {"ratio": 1.23, "suspect": False}
@@ -178,3 +183,36 @@ def test_store_leg_divergence_flag():
     assert (
         bench.store_leg_divergence(890_000, 3_200_000)["ratio"] == bad["ratio"]
     )
+
+
+def test_bench_stdout_line_always_fits():
+    """The bench's stdout line is cut in stages; an artifact still too
+    long after every staged cut prints only the headline metric and the
+    pointer to the full artifact, never a line longer than the limit."""
+    import json
+
+    bench = _load_bench()
+    head = {"metric": "headline_suite_plus_frontier_kernel", "value": 10.5, "unit": "sec"}
+    small = {**head, "host_calibration": {"single_core_loop_per_sec": 1}}
+    assert json.loads(bench.slim_stdout_line(small)) == small
+
+    jaccard = {
+        f"case{i}": {"picked": "prefix", "winner": "prefix", "picked_winner": True,
+                     "sec_prefix": 1.25, "sec_brute": 2.5}
+        for i in range(20)
+    }
+    staged = {**head, "jaccard_dispatch": jaccard, "full_detail": "BENCH_FULL.json"}
+    out = json.loads(bench.slim_stdout_line(staged))
+    assert out["jaccard_dispatch"]["case0"] == {"picked": "prefix", "picked_winner": True}
+
+    oversized = {
+        **head,
+        "queries": {f"q{i}": 1.0 for i in range(400)},
+        "jaccard_dispatch": jaccard,
+        "host_calibration": {"single_core_loop_per_sec": 1, "bench_wall_sec": 2},
+        "full_detail": "BENCH_FULL.json",
+    }
+    line = bench.slim_stdout_line(oversized)
+    assert len(line) <= bench.STDOUT_LINE_MAX
+    assert json.loads(line) == {**head, "full_detail": "BENCH_FULL.json"}
+    assert "queries" in oversized  # the caller's dict is not cut
