@@ -97,7 +97,7 @@ def _oracle_urls_cte() -> str:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the frontier hot path (canonicalize -> hash -> Bloom ->
+    """Flagship: the frontier hot path (canonicalize -> hash -> broadcast
     anti-join vs seen -> politeness quota) as one batch over sf0.001."""
     sf_dir = "/root/testdata/sf0.001"
     urls = _event_urls(spark, sf_dir)
@@ -107,7 +107,7 @@ def entry(spark: SparkSession) -> DataFrame:
     )
     cand = fr.apply_robots(cand, robots)
     seen = cand.filter(F.col("event_id") % 3 == 0).select("url_hash")
-    new = fr.dedup_against_seen(spark, cand, seen, use_bloom=True, expected_seen=400)
+    new = fr.dedup_against_seen(spark, cand, seen, expected_seen=400)
     pending = new.select(
         "canon_url", "url_hash", "host", F.lit(0).alias("priority"),
         F.col("event_id").alias("seq"),
@@ -267,7 +267,7 @@ def _crawl_canonicalize_counts(spark, sf_dir):
 def _crawl_seen_antijoin(spark, sf_dir):
     cand = fr.canonicalize_candidates(_event_urls(spark, sf_dir))
     seen = cand.filter(F.col("event_id") % 3 == 0).select("url_hash")
-    new = fr.dedup_against_seen(spark, cand, seen, use_bloom=True)
+    new = fr.dedup_against_seen(spark, cand, seen)
     return new.select(F.col("canon_url"))
 
 

@@ -26,7 +26,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 from pyspark.sql import functions as F
@@ -34,7 +36,6 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
-from literature_crawler_spark.operators import bloom as bloom_mod
 from literature_crawler_spark.operators import cuckoo as cuckoo_mod
 from literature_crawler_spark.operators import frontier as fr
 from literature_crawler_spark.operators import politeness as pol
@@ -81,15 +82,15 @@ def steal_gated_best(
     clean_reps: int = 2,
     max_attempts: int = 8,
     sleep_s: float = 10.0,
-) -> tuple[float, float, int, int]:
+) -> tuple[float, float, int, int, list[float]]:
     """min-of-clean-reps timing: run ``fn`` (returns elapsed seconds) until
     ``clean_reps`` reps pass the steal gate or attempts run out. Returns
-    (best_sec, steal_frac_of_best, n_clean, n_attempts). If no rep comes
-    back clean the best dirty rep is returned with its (high) steal
-    fraction recorded — contamination stays visible, never silent."""
-    best, best_frac, clean, attempts = None, None, 0, 0
+    (best_sec, steal_frac_of_best, n_clean, n_attempts, clean_secs). If no
+    rep comes back clean the best dirty rep is returned with its (high)
+    steal fraction recorded — contamination stays visible, never silent."""
+    best, best_frac, attempts, clean_secs = None, None, 0, []
     dirty_best, dirty_frac = None, None
-    while clean < clean_reps and attempts < max_attempts:
+    while len(clean_secs) < clean_reps and attempts < max_attempts:
         attempts += 1
         s0 = _steal_ticks()
         dt = fn()
@@ -103,12 +104,12 @@ def steal_gated_best(
                 dirty_best, dirty_frac = dt, frac
             time.sleep(sleep_s)  # storms last minutes: spread attempts out
             continue
-        clean += 1
+        clean_secs.append(dt)
         if best is None or dt < best:
             best, best_frac = dt, frac
     if best is None:
-        return dirty_best, dirty_frac, clean, attempts
-    return best, best_frac, clean, attempts
+        return dirty_best, dirty_frac, 0, attempts, clean_secs
+    return best, best_frac, len(clean_secs), attempts, clean_secs
 
 
 def _materialize(df) -> int:
@@ -130,19 +131,24 @@ def _bench_urls(n_hosts: int):
     return urls
 
 
-def _kernel_once(spark, urls, seen, seen_n, n, strategy, bloom_store=None) -> float:
+def _kernel_once(spark, urls, seen, seen_n, n, store=None, shuffle=False) -> float:
     """One timed frontier-kernel rep: canonicalize -> hash ->
     membership-test -> anti-join -> politeness rank, materialized to noop.
-    With a maintained store the probe is FUSED into the canonicalize Arrow
-    kernel (one Python crossing — operators/frontier.py)."""
+    With a maintained ``store`` the probe is FUSED into the canonicalize
+    Arrow kernel (one Python crossing — operators/frontier.py) and
+    ``dedup_against_seen`` anti-joins only the maybe-seen rows; without
+    one it takes the broadcast anti-join up to ``fr.BROADCAST_SEEN_MAX``
+    seen keys and a plain anti-join above. ``shuffle=True`` replaces the
+    seen test with a sort-merge (shuffle) anti-join of every candidate at
+    any seen size."""
     t0 = time.time()
     cand = fr.canonicalize_candidates(
-        urls(spark.range(n)), output_cols=["id"], probe_store=bloom_store
+        urls(spark.range(n)), output_cols=["id"], probe_store=store
     )
-    new = fr.dedup_against_seen(
-        spark, cand, seen, use_bloom=strategy, expected_seen=seen_n,
-        bloom_store=bloom_store,
-    )
+    if shuffle:
+        new = cand.join(seen.hint("shuffle_merge"), "url_hash", "left_anti")
+    else:
+        new = fr.dedup_against_seen(spark, cand, seen, expected_seen=seen_n)
     pending = new.select(
         "canon_url", "url_hash", "host",
         F.lit(0).alias("priority"), F.col("id").alias("seq"),
@@ -150,6 +156,40 @@ def _kernel_once(spark, urls, seen, seen_n, n, strategy, bloom_store=None) -> fl
     sched = pol.schedule_wave(pending, politeness=None, default_budget=1000)
     _materialize(sched)
     return time.time() - t0
+
+
+def _timed_kernel(
+    spark, urls, seen, seen_n, n_urls, cpus, store=None, shuffle=False, clean_reps=2
+):
+    """Steal-gated best of ``_kernel_once`` after a plan-identical warmup
+    at a quarter of the size (at least 100k URLs, at most ``n_urls``)."""
+    _kernel_once(
+        spark, urls, seen, seen_n, max(n_urls // 4, min(n_urls, 100_000)), store, shuffle
+    )
+    return steal_gated_best(
+        lambda: _kernel_once(spark, urls, seen, seen_n, n_urls, store, shuffle),
+        cpus,
+        clean_reps=clean_reps,
+        max_attempts=10,
+    )
+
+
+def _seen_set(spark, urls, ids):
+    """The seen keys of ``ids``' URLs, persisted and counted outside any
+    timed section."""
+    seen = fr.canonicalize_candidates(urls(ids), output_cols=[]).select("url_hash").persist()
+    return seen, seen.count()
+
+
+def _cuckoo_store(seen, seen_n: int):
+    """A cuckoo store holding every seen key, merged untimed: a crawl
+    maintains it incrementally across waves, so a wave only pays the
+    probe."""
+    store = cuckoo_mod.BucketedCuckooStore.create(
+        tempfile.mkdtemp(prefix="cuckoobench_"), expected_items=seen_n, n_buckets=64
+    )
+    store.merge(seen)
+    return store
 
 
 def bench_frontier(spark, n_urls: int, cpus: int, n_hosts: int = 1000) -> dict:
@@ -162,178 +202,110 @@ def bench_frontier(spark, n_urls: int, cpus: int, n_hosts: int = 1000) -> dict:
     north rule's politeness-gated scheduling). Host skew: host 0 carries
     ~10% of URLs.
 
-    Three dedup strategies are timed:
-    * broadcast — exact broadcast anti-join (the < 5M-seen path);
-    * bloom — ad-hoc single bitmap REBUILT inside the timed region (the
-      worst-case wave that cannot reuse state);
-    * bucketed — FUSED probe of a pre-maintained BucketedBloomStore inside
-      the canonicalize Arrow kernel (the steady-state 10^10 path: the store
-      is merged incrementally per wave, so probe cost is what a production
-      wave actually pays).
+    Two seen-test paths are timed:
+    * broadcast — exact broadcast anti-join (the path up to
+      ``fr.BROADCAST_SEEN_MAX`` seen keys; past it the same call takes the
+      plain anti-join, recorded as ``plain_antijoin``);
+    * cuckoo — FUSED probe of a pre-maintained BucketedCuckooStore inside
+      the canonicalize Arrow kernel, then the exact anti-join of the
+      maybe-seen rows (the steady-state path: the store is merged
+      incrementally per wave, so probe cost is what a production wave
+      actually pays).
     """
     urls = _bench_urls(n_hosts)
-    seen = fr.canonicalize_candidates(
-        urls(spark.range(0, n_urls, 3)), output_cols=[]
-    ).select("url_hash")
-    seen = seen.persist()
-    seen_n = seen.count()  # materialize outside the timed section
+    seen, seen_n = _seen_set(spark, urls, spark.range(0, n_urls, 3))
 
     # Steady-state measurement: a 10^10-frontier crawl runs this exact
     # codegen for hours, so JIT tier-up (the first run of the regex-heavy
     # canonicalize stage can be 10-20x slower than warm) is amortized to
-    # zero. Warm each strategy with the full pipeline, take the best of the
-    # steal-gated clean reps, and clear the cache BETWEEN strategies — the
-    # Bloom path persists its probed candidates, and leaving those cached
-    # inflates the other strategy's times ~3x (measured).
+    # zero. Warm each path with the full pipeline, take the best of the
+    # steal-gated clean reps, and clear the cache BETWEEN paths.
     spark.range(10).mapInPandas(lambda it: it, "id long").count()
-
-    def timed(strategy, bloom_store=None, clean_reps=2):
-        _kernel_once(  # plan-identical warmup
-            spark, urls, seen, seen_n, max(n_urls // 4, 100_000), strategy, bloom_store
-        )
-        return steal_gated_best(
-            lambda: _kernel_once(spark, urls, seen, seen_n, n_urls, strategy, bloom_store),
-            cpus,
-            clean_reps=clean_reps,
-            max_attempts=10,
-        )
 
     def repin():
         spark.catalog.clearCache()
         seen.persist().count()
 
-    # 'auto' resolves to the exact broadcast anti-join only under the
-    # ceiling; past it (e.g. a larger SPARK_GRAFT_BENCH_URLS) it falls
-    # through to the ad-hoc bloom path — record which plan was measured so
-    # NO key (rate, steal_frac, clean_reps) claims a broadcast that didn't
-    # happen
-    auto_is_broadcast = seen_n <= fr.BROADCAST_SEEN_MAX
-    auto_key = "broadcast" if auto_is_broadcast else "auto_adhoc_bloom"
-    t_bcast = timed("auto")
+    # record which plan the store-less leg measured, so NO key (rate,
+    # steal_frac, clean_reps) claims a broadcast that didn't happen
+    plain_key = "broadcast" if seen_n <= fr.BROADCAST_SEEN_MAX else "plain_antijoin"
+    t_plain = _timed_kernel(spark, urls, seen, seen_n, n_urls, cpus)
     repin()
-    t_bloom = timed(True)
-    repin()
-    import shutil
-    import tempfile
-
-    store_dir = tempfile.mkdtemp(prefix="bloombench_")
-    bstore = bloom_mod.BucketedBloomStore.create(
-        store_dir, expected_items=seen_n, n_buckets=64
-    )
-    bstore.merge(seen)  # untimed: incremental state maintained across waves
+    store = _cuckoo_store(seen, seen_n)
     # min-of-3 for the maintained-store probe (memory-bound random
     # gathers degrade under sub-cap neighbor pressure — see the at-scale
     # block's comment)
-    t_bucketed = timed(True, bloom_store=bstore, clean_reps=3)
-    shutil.rmtree(store_dir, ignore_errors=True)
+    t_cuckoo = _timed_kernel(spark, urls, seen, seen_n, n_urls, cpus, store, clean_reps=3)
+    shutil.rmtree(store.root, ignore_errors=True)
     seen.unpersist()
     spark.catalog.clearCache()
-    best = min(t for t, *_ in (t_bloom, t_bcast, t_bucketed))
+    best = min(t_plain[0], t_cuckoo[0])
     return {
         "n_urls": n_urls,
         "seen_size": seen_n,
         "sec": round(best, 3),
         "urls_per_sec": round(n_urls / best),
-        "bloom_path_urls_per_sec": round(n_urls / t_bloom[0]),
-        "bucketed_bloom_path_urls_per_sec": round(n_urls / t_bucketed[0]),
-        f"{auto_key}_path_urls_per_sec": round(n_urls / t_bcast[0]),
+        f"{plain_key}_path_urls_per_sec": round(n_urls / t_plain[0]),
+        "cuckoo_path_urls_per_sec": round(n_urls / t_cuckoo[0]),
         "steal_frac": {
-            auto_key: round(t_bcast[1], 3),
-            "bloom": round(t_bloom[1], 3),
-            "bucketed": round(t_bucketed[1], 3),
+            plain_key: round(t_plain[1], 3),
+            "cuckoo": round(t_cuckoo[1], 3),
         },
-        "clean_reps": {
-            auto_key: t_bcast[2], "bloom": t_bloom[2], "bucketed": t_bucketed[2]
-        },
+        "clean_reps": {plain_key: t_plain[2], "cuckoo": t_cuckoo[2]},
     }
 
 
 def bench_frontier_large_seen(spark, n_urls: int, cpus: int, n_hosts: int = 1000) -> dict:
-    """The > 5M-seen regime, where the broadcast anti-join is no longer an
-    option (north-rule scale): the FUSED maintained bucketed-Bloom probe
-    (canonicalize+hash+membership in one Arrow crossing) vs the plain
-    (shuffle) anti-join Catalyst falls back to, plus the cuckoo store
-    (VERDICT r03 item 5) — steady-state probe path, same kernel."""
-    import shutil
-    import tempfile
-
+    """The seen = 2x candidates regime, past the broadcast ceiling at
+    north-rule scale: the FUSED maintained cuckoo probe
+    (canonicalize+hash+membership in one Arrow crossing, then the exact
+    anti-join of the maybe-seen rows) vs a shuffle anti-join of every
+    candidate — steady-state probe path, same kernel."""
     urls = _bench_urls(n_hosts)
-    seen = fr.canonicalize_candidates(
-        urls(spark.range(0, n_urls * 2)), output_cols=[]  # seen > n_urls
-    ).select("url_hash").persist()
-    seen_n = seen.count()
+    seen, seen_n = _seen_set(spark, urls, spark.range(0, n_urls * 2))
+    store = _cuckoo_store(seen, seen_n)
 
-    store_dir = tempfile.mkdtemp(prefix="bloombench_lg_")
-    bstore = bloom_mod.BucketedBloomStore.create(
-        store_dir, expected_items=seen_n, n_buckets=64
-    )
-    bstore.merge(seen)
-    cuckoo_dir = tempfile.mkdtemp(prefix="cuckoobench_lg_")
-    cstore = cuckoo_mod.BucketedCuckooStore.create(
-        cuckoo_dir, expected_items=seen_n, n_buckets=64
-    )
-    cstore.merge(seen)
-
-    def repin():
-        spark.catalog.clearCache()
-        seen.persist().count()
-
-    def timed(strategy, bloom_store=None, clean_reps=2):
-        _kernel_once(
-            spark, urls, seen, seen_n, max(n_urls // 4, 100_000), strategy, bloom_store
-        )
-        return steal_gated_best(
-            lambda: _kernel_once(spark, urls, seen, seen_n, n_urls, strategy, bloom_store),
-            cpus,
-            clean_reps=clean_reps,
-            max_attempts=10,
-        )
-
-    # the maintained-store probes are memory-bound random gathers, so reps
+    # the maintained-store probe is memory-bound random gathers, so reps
     # degrade several-fold under neighbor-VM pressure the steal counter
     # only partially sees (measured: reps at 4-14% steal — under the cap —
     # swing 0.15-3.1M URLs/s in one process while <2%-steal reps cluster
     # fast). min-of-3 clean reps keeps one degraded-but-"clean" window
-    # from setting the artifact for these legs.
-    t_bucketed = timed(True, bstore, clean_reps=3)
-    repin()
-    t_cuckoo = timed(True, cstore, clean_reps=3)
-    repin()
-    t_anti = timed(False)
+    # from setting the artifact for this leg.
+    t_cuckoo = _timed_kernel(spark, urls, seen, seen_n, n_urls, cpus, store, clean_reps=3)
+    spark.catalog.clearCache()
+    seen.persist().count()
+    t_anti = _timed_kernel(spark, urls, seen, seen_n, n_urls, cpus, shuffle=True)
     seen.unpersist()
     spark.catalog.clearCache()
-    shutil.rmtree(store_dir, ignore_errors=True)
-    shutil.rmtree(cuckoo_dir, ignore_errors=True)
-    rate_bucketed = round(n_urls / t_bucketed[0])
-    rate_cuckoo = round(n_urls / t_cuckoo[0])
+    shutil.rmtree(store.root, ignore_errors=True)
+    cuckoo_secs = t_cuckoo[4] or [t_cuckoo[0]]
     return {
         "n_urls": n_urls,
         "seen_size": seen_n,
-        "bucketed_bloom_urls_per_sec": rate_bucketed,
-        "cuckoo_urls_per_sec": rate_cuckoo,
+        "cuckoo_urls_per_sec": round(n_urls / t_cuckoo[0]),
         "shuffle_antijoin_urls_per_sec": round(n_urls / t_anti[0]),
-        # same kernel, same input, two O(1)-probe stores: a >3x gap means
-        # one leg's "clean" reps were all contamination-slow (run F's
-        # 0.89M cuckoo outlier pattern) — flag it in-artifact so a
-        # poisoned rep can't silently become a headline number
-        "store_leg_divergence": store_leg_divergence(rate_bucketed, rate_cuckoo),
+        # one kernel, one input: a >2x spread between the cuckoo leg's
+        # fastest and slowest clean reps means some "clean" reps were
+        # contamination-slow (run F's 0.89M cuckoo outlier pattern) —
+        # flagged in-artifact so a poisoned rep can't silently become a
+        # headline number
+        "store_leg_divergence": store_leg_divergence(
+            n_urls / min(cuckoo_secs), n_urls / max(cuckoo_secs)
+        ),
         "steal_frac": {
-            "bucketed": round(t_bucketed[1], 3),
             "cuckoo": round(t_cuckoo[1], 3),
             "shuffle_antijoin": round(t_anti[1], 3),
         },
-        "clean_reps": {
-            "bucketed": t_bucketed[2], "cuckoo": t_cuckoo[2],
-            "shuffle_antijoin": t_anti[2],
-        },
+        "clean_reps": {"cuckoo": t_cuckoo[2], "shuffle_antijoin": t_anti[2]},
     }
 
 
-def store_leg_divergence(rate_a: float, rate_b: float, cap: float = 3.0) -> dict:
-    """Sanity cross-check for the two maintained-store legs (VERDICT r4
-    item 8): they run the identical fused probe kernel over the same
-    input, so their throughput ratio should sit well under ``cap``; a
-    bigger gap is a contaminated leg, not a real store difference."""
+def store_leg_divergence(rate_a: float, rate_b: float, cap: float = 2.0) -> dict:
+    """Variance check for the maintained-store leg (ROADMAP item 3's
+    guard): ``rate_a``/``rate_b`` are its fastest and slowest clean reps,
+    the identical kernel over the same input, so their ratio should sit
+    well under ``cap``; a bigger spread is a contaminated leg, not a real
+    difference."""
     ratio = max(rate_a, rate_b) / max(1.0, min(rate_a, rate_b))
     return {"ratio": round(ratio, 2), "suspect": ratio > cap}
 
@@ -380,7 +352,7 @@ def bench_jaccard_dispatch(spark, cpus: int) -> dict:
                 return time.time() - t0
 
             rep()  # warm
-            best, frac, n_ok, _ = steal_gated_best(
+            best, frac, n_ok, *_ = steal_gated_best(
                 rep, cpus, clean_reps=2, max_attempts=5, sleep_s=5.0
             )
             return round(best, 3), round(frac, 3), n_ok
@@ -457,7 +429,7 @@ def bench_rendered_fetch(spark, n_pages: int, cpus: int, n_hosts: int = 1000) ->
         return time.time() - t0
 
     rep()  # warm: Python worker fork + Arrow serializer + codegen
-    best, frac, clean, _ = steal_gated_best(rep, cpus)
+    best, frac, clean, *_ = steal_gated_best(rep, cpus)
     return {
         "n_pages": n_pages,
         "sec": round(best, 3),
@@ -504,7 +476,7 @@ def main() -> None:
             _materialize(df)
             return time.time() - t0
 
-        best, frac, clean, _ = steal_gated_best(
+        best, frac, clean, *_ = steal_gated_best(
             rep, cpus, clean_reps=2, max_attempts=5, sleep_s=5.0
         )
         timings[name] = round(best, 3)
@@ -530,7 +502,7 @@ def main() -> None:
 
     # North-rule N -> 4N scaling evidence, in the driver artifact itself.
     # Two pairs, same at-scale input (seen = 2x candidates through the
-    # maintained bucketed store), each pair measured INTERLEAVED — both
+    # maintained cuckoo store), each pair measured INTERLEAVED — both
     # legs' JVMs stay alive and each round runs one rep on the small leg
     # then one on the large (never concurrent), so the round's efficiency
     # ratio samples one host window. Sequential legs run minutes apart
@@ -653,9 +625,8 @@ def main() -> None:
     def _slim_frontier(d: dict) -> dict:
         keep = (
             "n_urls", "seen_size", "sec", "urls_per_sec",
-            "bloom_path_urls_per_sec", "bucketed_bloom_path_urls_per_sec",
-            "broadcast_path_urls_per_sec", "auto_adhoc_bloom_path_urls_per_sec",
-            "bucketed_bloom_urls_per_sec",
+            "broadcast_path_urls_per_sec", "plain_antijoin_path_urls_per_sec",
+            "cuckoo_path_urls_per_sec",
             "cuckoo_urls_per_sec", "shuffle_antijoin_urls_per_sec",
         )
         out = {k: d[k] for k in keep if k in d}

@@ -4,8 +4,9 @@ A from-scratch re-expression of the capabilities of the reference
 ``literature_crawler`` repo (Flask/SQLAlchemy/Redis/Selenium scientific
 literature crawler) as an idiomatic Spark engine:
 
-* URL frontier kernel: canonicalize -> xxhash64 -> Bloom prefilter ->
-  LEFT ANTI join against a hash-bucketed ``seen`` state table
+* URL frontier kernel: canonicalize -> xxhash64 -> cuckoo-filter
+  prefilter (at scale) -> LEFT ANTI join against a hash-bucketed ``seen``
+  state table
   (reference: per-row ``query.filter_by(...).first()`` seen checks,
   ``app/service/protocol_io/process_task/protocol_io_crawl.py:100``).
 * Politeness + priority scheduling: per-host quotas via window ranking over

@@ -1,2 +1,2 @@
 """Dataflow operators: frontier kernel, politeness scheduler, dedup suite,
-similarity search, image pipeline, Bloom membership."""
+similarity search, image pipeline, cuckoo-filter seen store."""

@@ -1,21 +1,22 @@
-"""Bucketed cuckoo-filter URL-seen store — the deletable alternative to
-``bloom.BucketedBloomStore`` (the north rule names "bloom/cuckoo" as the
-two admissible seen-set structures).
+"""Bucketed cuckoo-filter URL-seen store: the engine's one maintained
+membership structure (the north rule names "bloom/cuckoo" as the two
+admissible seen-set structures).
 
-Why a second structure: a Bloom bitmap can only ever grow, so retracting
-a URL from the seen set (recrawl-after-expiry — the reference re-enters a
-protocol when its ``version_id`` changes, ``protocol_io_crawl.py``'s
-update path — or un-committing a failed wave) forces a full rebuild. A
-cuckoo filter (Fan et al., "Cuckoo Filter: Practically Better Than
-Bloom", CoNEXT 2014 — public) supports O(1) delete of previously-inserted
-keys at comparable space and a LOWER false-positive rate, so the seen
-store can follow the seen table's MERGE deltas in both directions.
+Why cuckoo: a Bloom bitmap can only ever grow, so retracting a URL from
+the seen set (recrawl-after-expiry — the reference re-enters a protocol
+when its ``version_id`` changes, ``protocol_io_crawl.py``'s update path
+— or un-committing a failed wave) would force a full rebuild. A cuckoo
+filter (Fan et al., "Cuckoo Filter: Practically Better Than Bloom",
+CoNEXT 2014 — public) supports O(1) delete of previously-inserted keys at
+comparable space and a LOWER false-positive rate, so the seen store
+follows the seen table's MERGE deltas in both directions.
 
-Layout mirrors the Bloom store (one file per ``pmod(url_hash,
-n_buckets)`` bucket, executor-side single-writer merge, lazy process-
-cache probe, seen-snapshot watermark), so ``CrawlEngine`` and
-``frontier.dedup_against_seen`` accept either store through the same
-``might_contain_col`` / ``merge`` duck-type.
+Layout: one file per ``pmod(url_hash, n_buckets)`` bucket, executor-side
+single-writer merge, lazy process-cache probe, seen-snapshot watermark.
+``CrawlEngine`` fuses ``probe_np`` into the canonicalize kernel
+(``frontier.canonicalize_candidates(probe_store=...)``), and
+``frontier.dedup_against_seen`` sends only the maybe-seen rows through
+the exact anti-join.
 
 Per-bucket file format: a uint16 array of shape (m, SLOTS) where 0 =
 empty slot. The two candidate rows for hash h are
@@ -25,11 +26,11 @@ empty slot. The two candidate rows for hash h are
 
 so relocation needs only the stored fingerprint, never the key. m is a
 power of two; fingerprints are 16-bit (0 remaps to 1 so 0 can mean
-"empty"), giving FPR ~ 2*SLOTS/2^16 ~ 0.02% per probe — ~50x below the
-Bloom default fpp=0.01.
+"empty"), giving FPR ~ 2*SLOTS/2^16 ~ 0.02% per probe — ~50x below a Bloom
+filter at the usual fpp=0.01.
 
-Resize contract: tables are sized at ``create(expected_items)`` exactly
-like the Bloom store. Fingerprints cannot recover their keys, so a
+Resize contract: tables are sized at ``create(expected_items)``.
+Fingerprints cannot recover their keys, so a
 bucket that overflows CANNOT grow in place without risking the superset
 invariant (a dropped key = false negative = re-crawled duplicate).
 Overflow therefore surfaces as ``CuckooOverflow`` on the driver, and the
@@ -177,7 +178,8 @@ class _Table:
         return removed
 
 
-# Process-local probe cache, keyed by (path, mtime_ns) like the Bloom one.
+# Process-local probe cache, keyed by (path, mtime_ns) so a merged
+# (rewritten) bucket file invalidates its stale entry.
 _TABLE_CACHE: dict[tuple[str, int], np.ndarray] = {}
 _TABLE_CACHE_CAP = 256
 
@@ -203,9 +205,9 @@ def _load_table(path: str) -> np.ndarray | None:
 class BucketedCuckooStore:
     """One cuckoo-filter FILE per ``pmod(url_hash, n_buckets)`` bucket.
 
-    Same lifecycle/merge/probe/watermark surface as BucketedBloomStore,
-    plus ``delete`` — built and probed entirely on executors; the driver
-    only ever sees per-bucket counts.
+    Lifecycle (``create``/``open``), ``merge``, ``delete``, probe and a
+    seen-snapshot watermark — built and probed entirely on executors; the
+    driver only ever sees per-bucket counts.
     """
 
     def __init__(self, root: str, n_buckets: int, bucket_rows: int) -> None:
@@ -315,8 +317,8 @@ class BucketedCuckooStore:
         return {r["bucket"]: r["n_keys"] for r in rows}
 
     def delete(self, df: DataFrame, hash_col: str = "url_hash") -> dict[int, int]:
-        """Remove previously-inserted keys (the retract/recrawl path Bloom
-        cannot serve). Same single-writer-per-bucket shape as merge."""
+        """Remove previously-inserted keys (the retract path). Same
+        single-writer-per-bucket shape as merge."""
         root = self.root
 
         def fold(key, pdf):
@@ -349,20 +351,27 @@ class BucketedCuckooStore:
 
     # ----------------------------------------------------------- probe ----
     def probe_np(self, hn: np.ndarray) -> np.ndarray:
-        """Vectorized membership test of an int64 hash array (same contract
-        as BucketedBloomStore.probe_np — shared by the pandas_udf probe and
-        the fused canonicalize kernel). Picklable instance, lazy per-bucket
-        table loads through the process cache."""
-        from literature_crawler_spark.operators.bloom import probe_bucketed
-
-        def test(b: int, sub: np.ndarray) -> np.ndarray | None:
-            arr = _load_table(os.path.join(self.root, f"b{b:05d}.cuckoo"))
-            return None if arr is None else _Table(arr).contains(sub)
-
-        return probe_bucketed(hn, self.n_buckets, test)
+        """Vectorized membership test of an int64 hash array — the numpy
+        core shared by the ``pandas_udf`` probe and the fused canonicalize
+        kernel (``frontier.canonicalize_candidates(probe_store=...)``),
+        which calls it in-process to avoid a second Arrow crossing. One
+        table lookup per distinct bucket; a missing bucket file means no
+        keys were ever merged there, so definitely not contained. The
+        instance is picklable (root + 2 ints), so it ships inside UDF
+        closures; tables load lazily through the process cache."""
+        out = np.zeros(len(hn), dtype=bool)
+        if len(hn) == 0:
+            return out
+        buckets = np.mod(hn.astype(np.int64), self.n_buckets)  # == Spark pmod
+        for b in np.unique(buckets):
+            arr = _load_table(self.bucket_path(int(b)))
+            if arr is not None:
+                mask = buckets == b
+                out[mask] = _Table(arr).contains(hn[mask])
+        return out
 
     def might_contain_col(self, hash_col: Column) -> Column:
-        """Membership-test Column (same contract as the Bloom store's)."""
+        """Membership-test Column: a pandas UDF over ``probe_np``."""
         store = self
 
         @F.pandas_udf(T.BooleanType())

@@ -4,7 +4,8 @@ The hot path of the north rule. Reference semantics being re-expressed:
 
 * seen-check: per-row ``query.filter_by(protocol_id=...).first()``
   (``protocol_io_crawl.py:100``, ``nature_protocol_crawl.py:95``) becomes a
-  Bloom prefilter + LEFT ANTI join on ``url_hash`` (J1 in SURVEY.md §2.3).
+  LEFT ANTI join on ``url_hash`` (J1 in SURVEY.md §2.3): broadcast while
+  the seen set is small, behind a cuckoo-filter prefilter at scale.
 * first-seen-wins dedup: ``set()`` accumulation in document order
   (``nature_protocol_crawl.py:135-140``, A4) becomes a row_number()=1 window
   over an explicit total-order key — Spark is set-oriented, so ordering
@@ -13,10 +14,11 @@ The hot path of the north rule. Reference semantics being re-expressed:
   become a broadcast rules join.
 
 Scale notes (10^10 URLs): candidates and ``seen`` are both bucketed by
-``pmod(url_hash, n_buckets)``; the anti-join shuffles only the Bloom-maybe
-survivors (~1% of candidates at fpp=0.01 when most are genuinely new).
-AQE handles residual skew; the Bloom bitmap is per-bucket at real scale
-(see operators.bloom docstring).
+``pmod(url_hash, n_buckets)``; with a maintained cuckoo store the probe
+runs inside the canonicalize kernel and the anti-join shuffles only the
+maybe-seen survivors (the store's ~0.02% false positives plus the true
+re-discoveries). AQE handles residual skew; the store keeps one table
+file per bucket (see operators.cuckoo docstring).
 """
 
 from __future__ import annotations
@@ -27,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from literature_crawler_spark.functions import hashing, urls
-from literature_crawler_spark.operators import bloom as bloom_mod
 
 DEFAULT_N_BUCKETS = 64
 
@@ -43,7 +44,7 @@ def _arrow_canon_runner(
     canonicalize/host_of exactly (equality is property-tested).
     ``out_cols``: input columns to return (None = all) — see
     canonicalize_candidates on pruning through the UDF boundary.
-    ``probe_store``: a Bucketed{Bloom,Cuckoo}Store — when given, the kernel
+    ``probe_store``: a BucketedCuckooStore — when given, the kernel
     ALSO emits ``url_hash`` (Spark-exact xxhash64 of canon_url, computed
     vectorized in numpy: functions/npxxhash.py) and ``_maybe_seen``
     (``probe_store.probe_np``) so the whole
@@ -325,9 +326,11 @@ def first_seen_dedup(candidates: DataFrame, order_cols: list[str]) -> DataFrame:
     )
 
 
-# Below this many seen keys, a broadcast LEFT ANTI join (no shuffle of the
-# candidate side, no Python) beats the Bloom path; above it the broadcast
-# no longer fits and Bloom + bucketed shuffle takes over. 8 B/key -> ~40 MB.
+# Below this many seen keys a broadcast LEFT ANTI join (no shuffle of the
+# candidate side, no Python) is the whole seen test; above it the seen
+# keys no longer fit a broadcast (8 B/key -> ~40 MB) and the anti-join
+# shuffles. CrawlEngine(use_bloom='auto') switches to a maintained cuckoo
+# store here.
 BROADCAST_SEEN_MAX = 5_000_000
 
 
@@ -335,27 +338,25 @@ def dedup_against_seen(
     spark: SparkSession,
     candidates: DataFrame,
     seen: DataFrame | None,
-    use_bloom: bool | str = "auto",
     expected_seen: int | None = None,
-    bloom_store: "bloom_mod.BucketedBloomStore | None" = None,
 ) -> DataFrame:
-    """Candidates not yet in the seen set.
+    """Candidates not yet in the seen set. The anti-join is exact, so the
+    path taken changes the cost, never the rows; it follows from the
+    inputs:
 
-    Strategy (``use_bloom``):
-    * ``'auto'`` — broadcast anti-join while the seen set fits in a
-      broadcast (< BROADCAST_SEEN_MAX keys); Bloom + exact anti-join above
-      (bucketed store if one is supplied, else an ad-hoc single bitmap).
-    * ``True`` — always Bloom prefilter: rows the Bloom says are
-      definitely-new skip the shuffle entirely; only maybe-seen rows take
+    * candidates carrying ``_maybe_seen`` (the fused cuckoo probe of
+      ``canonicalize_candidates(probe_store=...)``) are split on it:
+      definitely-new rows skip the join, and only the maybe-seen rows take
       the exact LEFT ANTI join. (The reference does one DB point-read per
       URL instead.)
-    * ``False`` — plain anti-join (Catalyst picks broadcast vs shuffle).
+    * otherwise a broadcast anti-join while the seen set has at most
+      ``BROADCAST_SEEN_MAX`` keys, and a plain (shuffle) anti-join above.
 
-    ``bloom_store``: a pre-maintained BucketedBloomStore covering (a
-    superset of) ``seen`` — the 10^10 path: no per-call build, no driver
-    bitmap, probes hit per-bucket files through the executor cache.
+    ``expected_seen`` is the seen set's key count when the caller knows
+    it (the engine reads it from the seen manifest); None counts it.
+    ``spark`` is unused and kept for the callers' positional signature.
 
-    The Bloom path fences the probed candidates with an eager
+    The split fences the probed candidates with an eager
     ``localCheckpoint``, so both union branches read one materialization.
     Unlike a ``persist()``, the fence needs no unpersist: its blocks are
     freed once the returned DataFrame is garbage-collected, so a long wave
@@ -369,29 +370,14 @@ def dedup_against_seen(
     n = expected_seen if expected_seen is not None else seen_keys.count()
     if n == 0:
         return unmarked
-    if use_bloom == "auto":
-        if n <= BROADCAST_SEEN_MAX and bloom_store is None and not premarked:
-            return candidates.join(F.broadcast(seen_keys), "url_hash", "left_anti")
-        use_bloom = True
-    if not use_bloom:
-        return unmarked.join(seen_keys, "url_hash", "left_anti")
-    if premarked:
-        # candidates came out of the FUSED canonicalize kernel
-        # (canonicalize_candidates(probe_store=...)): the membership test
-        # already ran inside the canon Arrow pass, so no second crossing —
-        # just split on the carried flag.
-        probe = None
-    elif bloom_store is not None:
-        probe = bloom_store.might_contain_col(F.col("url_hash"))
-    else:
-        bf = bloom_mod.build_bloom(seen_keys, "url_hash", expected_items=n)
-        probe = bloom_mod.might_contain_col(spark, bf, F.col("url_hash"))
+    if not premarked:
+        if n <= BROADCAST_SEEN_MAX:
+            seen_keys = F.broadcast(seen_keys)
+        return candidates.join(seen_keys, "url_hash", "left_anti")
     # fence the probed candidates: both branches of the union scan this
     # one materialization instead of re-running the upstream pipeline
     # (canonicalize + probe) twice
-    maybe = (
-        candidates if premarked else candidates.withColumn("_maybe_seen", probe)
-    ).localCheckpoint(eager=True)
+    maybe = candidates.localCheckpoint(eager=True)
     definitely_new = maybe.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     needs_check = maybe.filter(F.col("_maybe_seen")).drop("_maybe_seen")
     checked = needs_check.join(seen_keys, "url_hash", "left_anti")

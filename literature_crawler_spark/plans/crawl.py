@@ -30,9 +30,12 @@ budget; priority of a URL = the wave that discovered it (BFS depth).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import os
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from literature_crawler_spark.operators import cuckoo as cuckoo_mod
 from literature_crawler_spark.operators import frontier as fr
 from literature_crawler_spark.operators import politeness as pol
 from literature_crawler_spark.plans.state import SnapshotStore
@@ -107,7 +110,7 @@ class CrawlEngine:
         politeness: DataFrame | None = None,
         default_budget: int = pol.DEFAULT_BUDGET,
         n_buckets: int = fr.DEFAULT_N_BUCKETS,
-        use_bloom: bool | str = "auto",
+        use_bloom: str | bool = "auto",
         fetcher=None,
         compact_every: int | None = 8,
         two_phase: bool | str = "auto",
@@ -143,61 +146,39 @@ class CrawlEngine:
         # compaction (rewrite cost amortizes over more waves; Iceberg's
         # analogue is data-file bin-packing on a maintenance schedule)
         self.compact_seen_every = compact_seen_every
-        # use_bloom='bucketed' maintains a BucketedBloomStore next to the
-        # state tables (one bitmap file per url_hash bucket, executor-built)
-        # and probes it instead of building a bitmap per wave — the 10^10
-        # path. use_bloom='cuckoo' maintains a BucketedCuckooStore instead
-        # (same probe/merge duck-type, lower FPR, and DELETABLE — the
-        # recrawl/retract path a Bloom bitmap cannot serve). 'auto' uses
-        # broadcast/per-wave plans while seen is small, then SELF-UPGRADES
+        # The seen store. use_bloom='cuckoo' maintains a BucketedCuckooStore
+        # next to the state tables (one table file per url_hash bucket,
+        # executor-built) whose probe runs inside the canonicalize kernel;
+        # it is deletable, so retract removes keys in place. 'auto' uses
+        # the broadcast anti-join while seen is small, then SELF-UPGRADES
         # to a maintained cuckoo store the first wave after committed seen
-        # crosses fr.BROADCAST_SEEN_MAX (the measured-best at-scale path,
-        # BENCH.md), and re-adopts an existing store on resume. Invariant
-        # for every maintained mode: deltas merge into the store BEFORE
-        # the seen commit, so the store is always a superset of committed
-        # seen (false positives only).
-        self.use_bloom = use_bloom
-        self._bloom_store = None
-        import os
-
-        self._store_root = os.path.join(store.root, "bloom")
-        if use_bloom in ("bucketed", "cuckoo"):
-            from literature_crawler_spark.operators import bloom as bloom_mod
-            from literature_crawler_spark.operators import cuckoo as cuckoo_mod
-
-            kind = bloom_mod.BucketedBloomStore if use_bloom == "bucketed" else (
-                cuckoo_mod.BucketedCuckooStore
+        # crosses fr.BROADCAST_SEEN_MAX, and re-adopts an existing store
+        # on resume. False keeps no store (exact anti-join only).
+        # Invariant while a store exists: deltas merge into it BEFORE the
+        # seen commit, so it is always a superset of committed seen
+        # (false positives only).
+        if use_bloom is not False and use_bloom not in ("auto", "cuckoo"):
+            raise ValueError(
+                f"use_bloom must be 'auto', 'cuckoo' or False, got {use_bloom!r}"
             )
-            root = self._store_root
-            self._bloom_store = kind.open(root)
-            seen_latest = self.store.latest("seen")
-            if self._bloom_store is None:
-                self._bloom_store = kind.create(
-                    root, expected_items=2_000_000, n_buckets=n_buckets
-                )
-                seen = self.seen()
-                if seen is not None:  # resume from a pre-bucketed-state run
-                    self._store_merge(seen.select("url_hash"))
-                    self._bloom_store.set_watermark(seen_latest["id"])
-            elif seen_latest is not None:
-                self._refresh_adopted_store(seen_latest)
-        elif use_bloom == "auto":
-            # A previous run (auto past the broadcast ceiling, or explicit
-            # bucketed/cuckoo) may have left a maintained store next to the
-            # state tables — adopt it so a resumed crawl keeps the
-            # fused-probe path instead of regressing to per-wave bitmaps.
-            # If nothing is committed yet the orphan is ignored; the
-            # threshold upgrade in run_wave rebuilds from scratch.
-            from literature_crawler_spark.operators import bloom as bloom_mod
-            from literature_crawler_spark.operators import cuckoo as cuckoo_mod
-
+        self.use_bloom = use_bloom
+        self._seen_store = None
+        self._store_root = os.path.join(store.root, "bloom")
+        if use_bloom is not False:
             st = cuckoo_mod.BucketedCuckooStore.open(self._store_root)
-            if st is None:
-                st = bloom_mod.BucketedBloomStore.open(self._store_root)
             seen_latest = self.store.latest("seen")
             if st is not None and seen_latest is not None:
-                self._bloom_store = st
+                self._seen_store = st
                 self._refresh_adopted_store(seen_latest)
+            elif use_bloom == "cuckoo":
+                # 'auto' ignores an orphan store while nothing is committed
+                # (the threshold upgrade in run_wave rebuilds from scratch)
+                self._seen_store = st or cuckoo_mod.BucketedCuckooStore.create(
+                    self._store_root, expected_items=2_000_000, n_buckets=n_buckets
+                )
+                if seen_latest is not None:  # resume a run that kept no store
+                    self._store_merge(self.seen().select("url_hash"))
+                    self._seen_store.set_watermark(seen_latest["id"])
         # Optional Arrow-UDF fetch path (operators.fetch.Fetcher): when set,
         # waves fetch via mapInPandas over salt-spread partitions (the live
         # deploy path) instead of hash-joining the pages corpus table. Both
@@ -227,39 +208,32 @@ class CrawlEngine:
 
     # ------------------------------------------------------------ state ----
     def _refresh_adopted_store(self, seen_latest: dict) -> None:
-        """Staleness check for a pre-existing membership store: a store
-        BEHIND the committed seen set (e.g. interleaved runs with a
-        different use_bloom mode) would give false negatives ->
-        re-crawled URLs. Bloom stores re-merge in place (OR is
-        idempotent). Cuckoo insert is NOT idempotent: re-merging keys
-        already present would ~double occupancy and trip an overflow
-        rebuild, and a crash loop between merge and set_watermark would
-        repeat that rebuild each start — so cuckoo rebuilds fresh at
-        current capacity instead (bounded, restart-idempotent)."""
-        from literature_crawler_spark.operators import cuckoo as cuckoo_mod
-
-        wm = self._bloom_store.watermark()
+        """Staleness check for a pre-existing seen store: a store BEHIND
+        the committed seen set (e.g. interleaved runs with use_bloom=False)
+        would give false negatives -> re-crawled URLs. Cuckoo insert is
+        NOT idempotent: re-merging keys already present would ~double
+        occupancy and trip an overflow rebuild, and a crash loop between
+        merge and set_watermark would repeat that rebuild each start — so
+        the store rebuilds fresh at current capacity instead (bounded,
+        restart-idempotent)."""
+        wm = self._seen_store.watermark()
         if wm is not None and wm >= seen_latest["id"]:
             return
-        keys = self.seen().select("url_hash").dropDuplicates(["url_hash"])
-        if hasattr(self._bloom_store, "delete"):
-            # Size the rebuild from the ACTUAL key count (we scan seen for
-            # the merge anyway) — sizing from slot capacity is not a fixed
-            # point of rows_for (1024-row buckets re-create as 2048), so
-            # repeated adoptions would double the table every restart with
-            # zero key growth. One count() here is engine-init only, never
-            # per-wave; bucket-skew overflow still grows via _store_merge.
-            st = self._bloom_store
-            keys = keys.persist()
-            n_keys = keys.count()
-            self._bloom_store = cuckoo_mod.BucketedCuckooStore.create(
-                st.root, expected_items=max(n_keys, 1), n_buckets=st.n_buckets
-            )
-            self._store_merge(keys)
-            keys.unpersist()
-        else:
-            self._store_merge(keys)
-        self._bloom_store.set_watermark(seen_latest["id"])
+        # Size the rebuild from the ACTUAL key count (we scan seen for the
+        # merge anyway) — sizing from slot capacity is not a fixed point of
+        # rows_for (1024-row buckets re-create as 2048), so repeated
+        # adoptions would double the table every restart with zero key
+        # growth. One count() here is engine-init only, never per-wave;
+        # bucket-skew overflow still grows via _store_merge.
+        keys = self.seen().select("url_hash").dropDuplicates(["url_hash"]).persist()
+        n_keys = keys.count()
+        st = self._seen_store
+        self._seen_store = cuckoo_mod.BucketedCuckooStore.create(
+            st.root, expected_items=max(n_keys, 1), n_buckets=st.n_buckets
+        )
+        self._store_merge(keys)
+        keys.unpersist()
+        self._seen_store.set_watermark(seen_latest["id"])
 
     def _store_merge(self, delta: DataFrame) -> None:
         """Merge a url_hash delta into the membership store.
@@ -267,13 +241,10 @@ class CrawlEngine:
         A cuckoo store that overflows is rebuilt at doubled capacity from
         the AUTHORITATIVE key set (committed seen + this delta) — the
         resize contract in operators/cuckoo.py: fingerprints cannot
-        recover keys, so growth must re-insert from source. Bloom stores
-        never raise (bitmaps OR at any density; fpp degrades instead).
+        recover keys, so growth must re-insert from source.
         """
-        from literature_crawler_spark.operators import cuckoo as cuckoo_mod
-
         try:
-            self._bloom_store.merge(delta)
+            self._seen_store.merge(delta)
             return
         except cuckoo_mod.CuckooOverflow:
             pass
@@ -283,15 +254,15 @@ class CrawlEngine:
             full = seen.select("url_hash").unionByName(full).dropDuplicates(["url_hash"])
         full = full.persist()
         try:
-            st = self._bloom_store
+            st = self._seen_store
             cap = st.bucket_rows * cuckoo_mod.SLOTS * st.n_buckets
             while True:
                 cap *= 2
-                self._bloom_store = cuckoo_mod.BucketedCuckooStore.create(
+                self._seen_store = cuckoo_mod.BucketedCuckooStore.create(
                     st.root, expected_items=cap, n_buckets=st.n_buckets
                 )
                 try:
-                    self._bloom_store.merge(full)
+                    self._seen_store.merge(full)
                     return
                 except cuckoo_mod.CuckooOverflow:
                     continue
@@ -331,12 +302,15 @@ class CrawlEngine:
         new one (two frontier rows in one merge snapshot,
         nondeterministic reader tie-break). In-flight rows are silently
         excluded; recrawling one is ``requeue=True``'s job.
-        Store maintenance follows the commit: a cuckoo store DELETEs the
-        keys in place (its reason to exist); a Bloom store is rebuilt
-        from the new seen (bitmaps cannot delete). Ordering keeps the
-        superset invariant: the store is never behind seen — between
-        commit and store maintenance it holds extra keys, which only
-        cost wasted exact-join probes.
+        Store maintenance follows the commit: the cuckoo store DELETEs
+        the keys in place. Ordering keeps the superset invariant: the
+        store is never behind seen — between commit and delete it holds
+        extra keys, which only cost wasted exact-join probes.
+
+        The matched keys and the flipped frontier rows end in eager
+        ``localCheckpoint`` fences, as the wave's stages do: later jobs
+        plan from the fence, and its count rides an Observation on the
+        fence's own job.
 
         Returns ``{"matched": keys found eligible, "retracted": keys
         removed from seen (0 under requeue), "requeued": frontier rows
@@ -359,25 +333,27 @@ class CrawlEngine:
                     "url_hash",
                     "left_anti",
                 )
-        keys = keys.persist()
-        n = keys.count()
+        obs_keys = Observation()
+        keys = keys.observe(obs_keys, F.count("*").alias("n")).localCheckpoint(eager=True)
+        n = int(obs_keys.get["n"])
         if n == 0:
-            keys.unpersist()
             return {"retracted": 0, "matched": 0, "requeued": 0}
         if requeue:
             frontier = self.frontier()
             # only rows whose status actually changes count toward the
             # pending meta — seeds/new rows are in seen while still
             # 'pending', so flipping them too would double-count
+            obs_flip = Observation()
             flip = (
                 frontier.join(keys, "url_hash", "left_semi")
                 .filter(F.col("status") != "pending")
                 .drop("status")
                 .withColumn("status", F.lit("pending"))
                 .select(*FRONTIER_COLS)
-                .persist()
+                .observe(obs_flip, F.count("*").alias("n"))
+                .localCheckpoint(eager=True)
             )
-            n_requeued = flip.count()
+            n_requeued = int(obs_flip.get["n"])
             prev_meta = (self.store.latest("frontier") or {}).get("meta", {})
             pending = prev_meta.get("pending", 0) + n_requeued
             # a requeue flips statuses only: the seq high-water is unchanged
@@ -388,8 +364,6 @@ class CrawlEngine:
                 "frontier", flip, mode="merge", wave=self.last_wave(),
                 meta=meta, merge_key=["url_hash"],
             )
-            flip.unpersist()
-            keys.unpersist()
             return {"retracted": 0, "matched": n, "requeued": n_requeued}
         remaining = seen.join(keys, "url_hash", "left_anti")
         prev_total = (self.store.latest("seen") or {}).get("meta", {}).get("total")
@@ -399,21 +373,9 @@ class CrawlEngine:
             "seen", remaining, mode="replace", wave=self.last_wave(),
             meta={"total": prev_total - n, "retracted": n},
         )
-        if self._bloom_store is not None:
-            if hasattr(self._bloom_store, "delete"):  # cuckoo: in-place
-                self._bloom_store.delete(keys)
-            else:  # bloom: rebuild from the new seen
-                from literature_crawler_spark.operators import bloom as bloom_mod
-
-                st = self._bloom_store
-                self._bloom_store = bloom_mod.BucketedBloomStore.create(
-                    st.root,
-                    expected_items=max(prev_total - n, 2_000_000),
-                    n_buckets=st.n_buckets,
-                )
-                self._store_merge(self.seen().select("url_hash"))
-            self._bloom_store.set_watermark(sid)
-        keys.unpersist()
+        if self._seen_store is not None:
+            self._seen_store.delete(keys)
+            self._seen_store.set_watermark(sid)
         return {"retracted": n, "matched": n, "requeued": 0}
 
     def frontier(self) -> DataFrame | None:
@@ -444,15 +406,15 @@ class CrawlEngine:
             "frontier", frontier0, mode="replace", wave=0,
             meta={"pending": n, "total": n, "max_seq": n - 1},
         )
-        if self._bloom_store is not None:  # superset invariant: bloom first
+        if self._seen_store is not None:  # superset invariant: store first
             self._store_merge(frontier0.select("url_hash"))
         sid = self.store.commit(
             "seen",
             frontier0.select("url_hash", "canon_url", "bucket", "wave"),
             mode="append", wave=0, meta={"added": n, "total": n},
         )
-        if self._bloom_store is not None:
-            self._bloom_store.set_watermark(sid)
+        if self._seen_store is not None:
+            self._seen_store.set_watermark(sid)
         return n
 
     # ------------------------------------------------------------- wave ----
@@ -489,8 +451,6 @@ class CrawlEngine:
             self._hot_backlog = dict(keep[:MAX_TRACKED_HOSTS])
 
     def run_wave(self, wave: int) -> dict:
-        from pyspark.sql import Observation
-
         frontier = self.frontier()
         pending = frontier.filter(F.col("status") == "pending")
         prev_meta = (self.store.latest("frontier") or {}).get("meta", {})
@@ -552,22 +512,19 @@ class CrawlEngine:
             F.posexplode("links").alias("pos", "link"),
         ).coalesce(self.spark.sparkContext.defaultParallelism)
         # auto-upgrade: once the committed seen set outgrows the broadcast
-        # anti-join (fr.BROADCAST_SEEN_MAX keys), 'auto' switches from
-        # per-wave plans to a MAINTAINED cuckoo store — the measured-best
-        # at-scale membership structure (BENCH.md: cuckoo probe 2.6-3.8M
-        # URLs/s at local[32] vs 0.6-1.7M bucketed-Bloom, ~50x lower FPR,
-        # O(1) delete for retract). Built once from committed seen, then
-        # merged incrementally per wave like the explicit modes.
+        # anti-join (fr.BROADCAST_SEEN_MAX keys), 'auto' switches to a
+        # MAINTAINED cuckoo store (BENCH.md: cuckoo probe 2.6-3.8M URLs/s
+        # at local[32], O(1) delete for retract). Built once from
+        # committed seen, then merged incrementally per wave like
+        # 'cuckoo'.
         seen_meta = self.store.latest("seen")
         seen_total = (seen_meta or {}).get("meta", {}).get("total") or 0
         if (
             self.use_bloom == "auto"
-            and self._bloom_store is None
+            and self._seen_store is None
             and seen_total > fr.BROADCAST_SEEN_MAX
         ):
-            from literature_crawler_spark.operators import cuckoo as cuckoo_mod
-
-            self._bloom_store = cuckoo_mod.BucketedCuckooStore.create(
+            self._seen_store = cuckoo_mod.BucketedCuckooStore.create(
                 self._store_root,
                 expected_items=2 * seen_total,
                 n_buckets=self.n_buckets,
@@ -575,25 +532,24 @@ class CrawlEngine:
             self._store_merge(
                 self.seen().select("url_hash").dropDuplicates(["url_hash"])
             )
-            self._bloom_store.set_watermark(seen_meta["id"])
-        # when a maintained membership store exists, the seen-probe runs
+            self._seen_store.set_watermark(seen_meta["id"])
+        # when a maintained seen store exists, the seen-probe runs
         # INSIDE the canonicalize Arrow kernel (one Python crossing for
         # canonicalize+hash+membership-test instead of two — the local-mode
         # Arrow lane is the kernel's ceiling, BENCH.md); dedup_against_seen
         # then just splits on the carried _maybe_seen flag
         cand = fr.canonicalize_candidates(
             links.withColumnRenamed("link", "url"), base_host_col="base_host",
-            probe_store=self._bloom_store,
+            probe_store=self._seen_store,
         )
         cand = fr.first_seen_dedup(cand, ["parent_seq", "pos"])
 
-        # 4. membership test: Bloom prefilter + exact anti-join vs seen
+        # 4. membership test: exact anti-join vs seen — broadcast, or only
+        #    the store's maybe-seen rows when the probe ran above
         seen = self.seen()
         new = fr.dedup_against_seen(
             self.spark, cand, seen,
-            use_bloom=True if self._bloom_store is not None else self.use_bloom,
             expected_seen=(seen_meta or {}).get("meta", {}).get("total"),
-            bloom_store=self._bloom_store,
         )
         # robots last: its verdict depends only on (host, canon_url), so
         # filtering after both dedups keeps the same rows and matches each
@@ -654,26 +610,26 @@ class CrawlEngine:
                 # storage grows by a full table copy per compaction
                 self.store.expire_snapshots("frontier")
         seen_total = ((seen_meta or {}).get("meta", {}).get("total") or 0) + n_new
-        if self._bloom_store is not None and n_new:  # bloom BEFORE seen commit
+        if self._seen_store is not None and n_new:  # store BEFORE seen commit
             self._store_merge(new_rows.select("url_hash"))
         sid = self.store.commit(
             "seen", new_rows.select("url_hash", "canon_url", "bucket", "wave"),
             mode="append", wave=wave, meta={"added": n_new, "total": seen_total},
         )
-        if self._bloom_store is not None:
-            self._bloom_store.set_watermark(sid)
+        if self._seen_store is not None:
+            self._seen_store.set_watermark(sid)
         if self.compact_seen_every and wave % self.compact_seen_every == 0:
             csid = self.store.compact("seen")
             if csid is not None:
                 if self.expire_on_compact:
                     self.store.expire_snapshots("seen")
-                if self._bloom_store is not None:
+                if self._seen_store is not None:
                     # membership is unchanged by compaction, so the store
                     # is still a superset — advance the watermark so the
                     # next engine start does not see a "stale" store and
                     # rebuild for nothing (a crash before this line only
                     # costs that spurious rebuild, never correctness)
-                    self._bloom_store.set_watermark(csid)
+                    self._seen_store.set_watermark(csid)
         self.store.commit(
             "order",
             scheduled.select(F.lit(wave).alias("wave"), "seq", "host", "canon_url"),
@@ -769,23 +725,22 @@ class CrawlEngine:
             missing = missing.join(seen.select("url_hash"), "url_hash", "left_anti")
         missing = missing.persist()
         n = missing.count()
-        if n and self._bloom_store is not None:  # superset invariant: store first
-            delta = missing.select("url_hash")
-            if hasattr(self._bloom_store, "delete"):
-                # cuckoo insert is NOT idempotent, and the crash may have
-                # landed on EITHER side of the wave's pre-commit store
-                # merge — re-merging keys the store already holds would
-                # add duplicate fingerprints (occupancy creep, and a later
-                # retract delete() would remove only one copy). Insert
-                # only keys the store does not already hold; skipping a
-                # false positive is safe because the key is committed to
-                # seen right below, so the exact anti-join keeps covering
-                # it (the probe stage runs before the fold's writes —
-                # stage barrier — so probes always read pre-merge files).
-                delta = delta.filter(
-                    ~self._bloom_store.might_contain_col(F.col("url_hash"))
+        if n and self._seen_store is not None:  # superset invariant: store first
+            # cuckoo insert is NOT idempotent, and the crash may have
+            # landed on EITHER side of the wave's pre-commit store merge —
+            # re-merging keys the store already holds would add duplicate
+            # fingerprints (occupancy creep, and a later retract delete()
+            # would remove only one copy). Insert only keys the store does
+            # not already hold; skipping a false positive is safe because
+            # the key is committed to seen right below, so the exact
+            # anti-join keeps covering it (the probe stage runs before the
+            # fold's writes — stage barrier — so probes always read
+            # pre-merge files).
+            self._store_merge(
+                missing.select("url_hash").filter(
+                    ~self._seen_store.might_contain_col(F.col("url_hash"))
                 )
-            self._store_merge(delta)
+            )
         # commit even when n == 0 so seen's wave catches up — otherwise a
         # crashed zero-discovery wave would re-trigger this scan on every
         # resume forever
@@ -794,8 +749,8 @@ class CrawlEngine:
             "seen", missing, mode="append", wave=f_latest["wave"],
             meta={"added": n, "total": prev_total + n, "healed": True},
         )
-        if self._bloom_store is not None:
-            self._bloom_store.set_watermark(sid)
+        if self._seen_store is not None:
+            self._seen_store.set_watermark(sid)
         missing.unpersist()
         return n
 

@@ -94,6 +94,7 @@ class IcebergSnapshotStore:
             if not self._exists(table):
                 writer.create()
             else:
+                head = self.latest(table)["id"]
                 view = f"_lcs_merge_src_{table}"
                 df.createOrReplaceTempView(view)
                 on = " AND ".join(f"t.{k} <=> s.{k}" for k in merge_key)
@@ -107,13 +108,16 @@ class IcebergSnapshotStore:
                 # options, and losing wave/meta on every merge breaks
                 # resume (the engine compares latest()['wave']); persist
                 # the manifest as a per-snapshot TABLE property instead,
-                # which snapshots() folds back in
+                # which snapshots() folds back in. A MERGE that changes no
+                # row creates no snapshot: the head is still the previous
+                # commit's, whose manifest must not be overwritten.
                 sid = self.latest(table)["id"]
-                esc = json.dumps(props).replace("'", "''")
-                self.spark.sql(
-                    f"ALTER TABLE {ident} SET TBLPROPERTIES "
-                    f"('lcs-manifest-{sid}' = '{esc}')"
-                )
+                if sid != head:
+                    esc = json.dumps(props).replace("'", "''")
+                    self.spark.sql(
+                        f"ALTER TABLE {ident} SET TBLPROPERTIES "
+                        f"('lcs-manifest-{sid}' = '{esc}')"
+                    )
         return self.latest(table)["id"]
 
     # ------------------------------------------------------------- read ----

@@ -47,7 +47,7 @@ def seed_ingest_stream(
             cand = fr.apply_robots(cand, robots)
         cand = fr.first_seen_dedup(cand, ["seed_seq"])
         seen = store.read(spark, "seen")
-        new = fr.dedup_against_seen(spark, cand, seen, use_bloom=False)
+        new = fr.dedup_against_seen(spark, cand, seen)
         frontier = store.read(spark, "frontier")
         max_seq = 0
         if frontier is not None:

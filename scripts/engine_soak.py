@@ -115,7 +115,7 @@ def main() -> None:
                 "sec": round(dt, 1),
                 "urls_per_sec": round((m["scheduled"] + m["new_urls"]) / dt),
                 "steal_frac": round(steal_frac, 3),
-                "store": type(eng._bloom_store).__name__ if eng._bloom_store else "broadcast/adhoc",
+                "store": type(eng._seen_store).__name__ if eng._seen_store else "broadcast",
             }
         )
         if m.get("done"):

@@ -5,7 +5,7 @@ sandbox host, hypervisor steal storms land inside individual legs and
 poison min-of-reps (one contaminated sweep recorded the 8-core at-scale
 kernel at 1/4 of its clean rate). This script measures ONLY the frontier
 kernel — small-seen and at-scale (seen = 2x candidates, past the
-broadcast ceiling, maintained bucketed-Bloom store) — at local[2] /
+broadcast ceiling, maintained cuckoo store) — at local[2] /
 local[8] / local[32], bracketing every timed rep with the /proc/stat
 steal counter and RERUNNING any rep whose window saw > STEAL_CAP of one
 core stolen. Legs are sequential subprocess JVMs, GC sized per leg.
@@ -35,7 +35,7 @@ _COMMON = r'''
 import sys, time
 sys.path.insert(0, "%s")
 from pyspark.sql import functions as F
-from literature_crawler_spark.operators import bloom as bloom_mod
+from literature_crawler_spark.operators import cuckoo as cuckoo_mod
 from literature_crawler_spark.operators import frontier as fr
 from literature_crawler_spark.operators import politeness as pol
 from literature_crawler_spark.session import get_spark
@@ -79,18 +79,17 @@ seen = fr.canonicalize_candidates(urls(seen_ids), output_cols=[]).select("url_ha
 seen_n = seen.count()
 
 import shutil, tempfile
-store_dir = tempfile.mkdtemp(prefix="northbloom_")
-bstore = bloom_mod.BucketedBloomStore.create(store_dir, expected_items=seen_n, n_buckets=64)
-bstore.merge(seen)  # untimed: the store is maintained incrementally across waves
+store_dir = tempfile.mkdtemp(prefix="northcuckoo_")
+cstore = cuckoo_mod.BucketedCuckooStore.create(store_dir, expected_items=seen_n, n_buckets=64)
+cstore.merge(seen)  # untimed: the store is maintained incrementally across waves
 
 def run_once():
     t0 = time.time()
     # fused kernel: canonicalize + xxhash64 + store probe in ONE Arrow
     # crossing (operators/frontier.py, round 4)
     cand = fr.canonicalize_candidates(urls(spark.range(n_urls)),
-                                      output_cols=["id"], probe_store=bstore)
-    new = fr.dedup_against_seen(spark, cand, seen, use_bloom=True,
-                                expected_seen=seen_n, bloom_store=bstore)
+                                      output_cols=["id"], probe_store=cstore)
+    new = fr.dedup_against_seen(spark, cand, seen, expected_seen=seen_n)
     pending = new.select("canon_url", "url_hash", "host",
                          F.lit(0).alias("priority"), F.col("id").alias("seq"))
     sched = pol.schedule_wave(pending, politeness=None, default_budget=1000)
@@ -449,7 +448,7 @@ def main() -> None:
         # the faithful in-sandbox surrogate for a 1-executor vs 4-executor
         # cluster, and the direct test of whether the per-JVM Arrow lane
         # multiplies out with executor count. Same input, at-scale regime
-        # (16M-key seen, maintained bucketed store).
+        # (16M-key seen, maintained cuckoo store).
         legs = {
             "local[8]": run_leg(8, n_urls, "atscale"),
             "local-cluster[1,8,8192]": run_leg(

@@ -115,7 +115,7 @@ def urls(ids):
 seen = fr.canonicalize_candidates(urls(spark.range(0, n_urls, 3)), output_cols=[]).select("url_hash").persist()
 seen_n = seen.count()
 cand = fr.canonicalize_candidates(urls(spark.range(n_urls)), output_cols=["id"])
-new = fr.dedup_against_seen(spark, cand, seen, use_bloom="auto", expected_seen=seen_n)
+new = fr.dedup_against_seen(spark, cand, seen, expected_seen=seen_n)
 pending = new.select("canon_url", "url_hash", "host", F.lit(0).alias("priority"), F.col("id").alias("seq"))
 sched = pol.schedule_wave(pending, politeness=None, default_budget=1000)
 sched.write.format("noop").mode("overwrite").save()

@@ -4,12 +4,13 @@ Two measurement families, each run in SEQUENTIAL subprocess JVMs (one
 Spark JVM at a time — concurrent locals poison every number):
 
 1. headline sweep — full bench.py at local[2] / local[8] / local[32] on
-   the same input (suite + all three frontier dedup strategies);
+   the same input (suite + every frontier seen-test leg);
 2. kernel pairs — the frontier kernel alone at local[1] vs local[4]
-   (both ends pre-plateau on this one-socket box), at two seen-set
-   sizes: 12M URLs (seen 4M -> broadcast-anti-join path) and 16M URLs
-   (seen 5.3M -> Bloom path, the only path that exists at the rule's
-   10^10 scale). Each leg: full-size JIT warmup, then min of reps.
+   (both ends pre-plateau on this one-socket box): 12M URLs (seen 4M ->
+   broadcast anti-join), 16M URLs (seen 5.3M -> plain shuffle anti-join,
+   past the broadcast ceiling) and 16M URLs through a maintained cuckoo
+   store (fused probe, the steady-state path at the rule's 10^10 scale).
+   Each leg: full-size JIT warmup, then min of reps.
 
 Writes BENCH.md. Usage: python scripts/scaling_bench.py [sf_dir]
 """
@@ -45,19 +46,18 @@ def urls(ids):
 
 seen = fr.canonicalize_candidates(urls(spark.range(0, n_urls, 3)), output_cols=[]).select("url_hash").persist()
 seen_n = seen.count()
-bstore = None
-if mode == "bucketed":  # steady-state: store maintained across waves, probe-only timed
-    import shutil, tempfile
-    from literature_crawler_spark.operators import bloom as bloom_mod
-    store_dir = tempfile.mkdtemp(prefix="pairbloom_")
-    bstore = bloom_mod.BucketedBloomStore.create(store_dir, expected_items=seen_n, n_buckets=64)
-    bstore.merge(seen)
+cstore = None
+if mode == "cuckoo":  # steady-state: store maintained across waves, probe-only timed
+    import tempfile
+    from literature_crawler_spark.operators import cuckoo as cuckoo_mod
+    store_dir = tempfile.mkdtemp(prefix="paircuckoo_")
+    cstore = cuckoo_mod.BucketedCuckooStore.create(store_dir, expected_items=seen_n, n_buckets=64)
+    cstore.merge(seen)
 
 def run_once(n):
     t0 = time.time()
-    cand = fr.canonicalize_candidates(urls(spark.range(n)), output_cols=["id"])
-    new = fr.dedup_against_seen(spark, cand, seen, use_bloom=("auto" if bstore is None else True),
-                                expected_seen=seen_n, bloom_store=bstore)
+    cand = fr.canonicalize_candidates(urls(spark.range(n)), output_cols=["id"], probe_store=cstore)
+    new = fr.dedup_against_seen(spark, cand, seen, expected_seen=seen_n)
     pending = new.select("canon_url", "url_hash", "host", F.lit(0).alias("priority"), F.col("id").alias("seq"))
     sched = pol.schedule_wave(pending, politeness=None, default_budget=1000)
     sched.write.format("noop").mode("overwrite").save()
@@ -88,7 +88,7 @@ def run_bench(cpus: int, sf_dir: str, n_urls: int) -> dict:
 def run_kernel(cpus: int, n_urls: int, mode: str = "auto") -> dict:
     # each simulated executor sizes GC to its own cores, as real executors
     # do (JVM default is ~cores GC threads; starving GC below the worker
-    # count measurably collapses the allocation-heavy Bloom path)
+    # count measurably collapses the allocation-heavy kernel)
     gc = max(2, cpus)
     env = dict(
         os.environ,
@@ -124,8 +124,8 @@ def main() -> None:
         pairs = {}
         for name, n_urls, mode in (
             ("broadcast", 12_000_000, "auto"),       # seen 4M: broadcast anti-join
-            ("bloom-rebuild", 16_000_000, "auto"),   # seen 5.3M: bitmap built in-run
-            ("bucketed-steady", 16_000_000, "bucketed"),  # maintained store, probe only
+            ("shuffle-antijoin", 16_000_000, "auto"),  # seen 5.3M: past the broadcast ceiling
+            ("cuckoo-steady", 16_000_000, "cuckoo"),  # maintained store, probe only
         ):
             legs = {c: run_kernel(c, n_urls, mode) for c in (1, 4)}
             pairs[name] = {
@@ -163,13 +163,13 @@ def main() -> None:
     else:
         eff_2_8 = round(fr_[8]["urls_per_sec"] / (4 * fr_[2]["urls_per_sec"]), 2)
         eff_lg_2_8 = round(
-            lg[8]["bucketed_bloom_urls_per_sec"] / (4 * lg[2]["bucketed_bloom_urls_per_sec"]), 2
+            lg[8]["cuckoo_urls_per_sec"] / (4 * lg[2]["cuckoo_urls_per_sec"]), 2
         )
         eff_lg_8_32 = round(
-            lg[32]["bucketed_bloom_urls_per_sec"] / (4 * lg[8]["bucketed_bloom_urls_per_sec"]), 2
+            lg[32]["cuckoo_urls_per_sec"] / (4 * lg[8]["cuckoo_urls_per_sec"]), 2
         )
         head_fr = {c: fr_[c]["urls_per_sec"] for c in (2, 8, 32)}
-        head_lg = {c: lg[c]["bucketed_bloom_urls_per_sec"] for c in (2, 8, 32)}
+        head_lg = {c: lg[c]["cuckoo_urls_per_sec"] for c in (2, 8, 32)}
 
     lines = [
         "# BENCH — measured throughput + scaling evidence",
@@ -196,7 +196,7 @@ def main() -> None:
         else "",
         f"(whole-leg steal core-sec: {steal})." if north is not None else "",
         "",
-        "| parallelism | frontier URLs/s | at-scale 16M-seen bucketed URLs/s | query suite sec |",
+        "| parallelism | frontier URLs/s | at-scale 16M-seen cuckoo URLs/s | query suite sec |",
         "|---|---|---|---|",
     ] + [
         f"| local[{c}] | {head_fr[c]:,} | {head_lg[c]:,} | {suite[c]} |"
@@ -205,7 +205,7 @@ def main() -> None:
         "",
         f"**North-rule scaling evidence: {eff_lg_2_8} efficiency at N=2 -> 4N=8 on",
         "the AT-SCALE kernel (16M-key seen set — past any broadcast ceiling —",
-        "deduped through the maintained bucketed-Bloom store, the exact",
+        "deduped through the maintained cuckoo store, the exact",
         "steady-state a 10^10-URL frontier runs), measured on the SHIPPED",
         f"Arrow kernel with the same input at both ends"
         + ".** 8 -> 32 measures",
@@ -221,7 +221,7 @@ def main() -> None:
         "per-JVM lane cap multiplies out with executor count instead of",
         "saturating one process. Nothing in the PLAN serializes:",
         "no driver loop, no global sort; every shuffle partitions on",
-        "host/url_hash keys, and the Bloom store is per-bucket files merged",
+        "host/url_hash keys, and the cuckoo store is per-bucket files merged",
         "on executors.",
     ] + [
         "",
@@ -304,7 +304,7 @@ def main() -> None:
                 f"**{vol.get('shuffle_write_bytes_per_url', '?')} bytes/URL written,",
                 f"{vol.get('shuffle_read_bytes_per_url', '?')} bytes/URL read** — the",
                 "number that sizes cluster network for a 10^10-URL deploy",
-                "(~the politeness rank exchange; the Bloom-definite-new rows",
+                "(~the politeness rank exchange; the cuckoo-definite-new rows",
                 "skip the anti-join shuffle entirely).",
             ]
     with open(os.path.join(REPO, "BENCH.md"), "w") as f:

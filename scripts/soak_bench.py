@@ -7,18 +7,18 @@ store probe -> exact anti-join -> politeness rank) one order of magnitude
 up — 64M candidates against a 128M-key maintained seen store — to show the
 per-bucket store design holds as state grows 8x:
 
-* per-bucket filter files grow (cuckoo 8 MB, Bloom 4 MB per bucket at 2M
-  keys/bucket) but stay executor-cached; the DRIVER footprint is flat
-  (per-bucket count dicts only);
+* per-bucket cuckoo files grow (8 MB per bucket at 2M keys/bucket) but
+  stay executor-cached; the DRIVER footprint is flat (per-bucket count
+  dicts only);
 * probe cost per URL is O(1) regardless of seen size, so the 64M-candidate
   rate should track the 8M-candidate rate measured against the same store;
 * the candidate-side legs at 8M vs 64M isolate candidate-volume scaling
   from seen-size scaling (the 16M-seen numbers in BENCH_FULL.json cover
   the smaller-state point).
 
-Every rep is steal-gated exactly like bench.py. One-shot evidence run
-(~10-15 min at local[32]); results land in BENCH.md, not the driver
-artifact.
+Every rep is steal-gated exactly like bench.py's frontier legs. One-shot
+evidence run (~10-15 min at local[32]); results land in BENCH.md, not the
+driver artifact.
 
 Usage: python scripts/soak_bench.py
 Knobs: SPARK_GRAFT_SOAK_URLS (default 64_000_000), SPARK_GRAFT_CPUS.
@@ -39,11 +39,9 @@ sys.path.insert(0, REPO)
 from bench import (  # noqa: E402
     _bench_urls,
     _calibrate_cpu,
-    _kernel_once,
     _steal_ticks,
-    steal_gated_best,
+    _timed_kernel,
 )
-from literature_crawler_spark.operators import bloom as bloom_mod  # noqa: E402
 from literature_crawler_spark.operators import cuckoo as cuckoo_mod  # noqa: E402
 from literature_crawler_spark.operators import frontier as fr  # noqa: E402
 from literature_crawler_spark.session import get_spark  # noqa: E402
@@ -94,26 +92,13 @@ def main() -> None:
     out["cuckoo_merge_sec"] = round(time.time() - t0, 1)
     out["cuckoo_store_mb"] = round(_store_bytes(cuckoo_dir) / 2**20, 1)
 
-    bloom_dir = tempfile.mkdtemp(prefix="soak_bloom_")
-    bstore = bloom_mod.BucketedBloomStore.create(
-        bloom_dir, expected_items=seen_n, n_buckets=64
-    )
-    t0 = time.time()
-    bstore.merge(seen)
-    out["bloom_merge_sec"] = round(time.time() - t0, 1)
-    out["bloom_store_mb"] = round(_store_bytes(bloom_dir) / 2**20, 1)
-
     def repin():
         spark.catalog.clearCache()
         seen.persist().count()
 
-    def timed(n: int, strategy, store=None):
-        _kernel_once(  # plan-identical warmup at 1/4 size
-            spark, urls, seen, seen_n, max(n // 4, 100_000), strategy, store
-        )
-        best, frac, clean, attempts = steal_gated_best(
-            lambda: _kernel_once(spark, urls, seen, seen_n, n, strategy, store),
-            cpus,
+    def timed(n: int, store=None, shuffle=False):
+        best, frac, clean, attempts, _ = _timed_kernel(
+            spark, urls, seen, seen_n, n, cpus, store, shuffle
         )
         return {
             "sec": round(best, 3),
@@ -124,18 +109,15 @@ def main() -> None:
         }
 
     # candidate-volume scaling against the SAME 128M-key store
-    out["cuckoo_small_n"] = dict(timed(n_urls // 8, True, cstore), n_urls=n_urls // 8)
+    out["cuckoo_small_n"] = dict(timed(n_urls // 8, cstore), n_urls=n_urls // 8)
     repin()
-    out["cuckoo_full_n"] = dict(timed(n_urls, True, cstore), n_urls=n_urls)
+    out["cuckoo_full_n"] = dict(timed(n_urls, cstore), n_urls=n_urls)
     repin()
-    out["bucketed_bloom_full_n"] = dict(timed(n_urls, True, bstore), n_urls=n_urls)
-    repin()
-    out["shuffle_antijoin_full_n"] = dict(timed(n_urls, False), n_urls=n_urls)
+    out["shuffle_antijoin_full_n"] = dict(timed(n_urls, shuffle=True), n_urls=n_urls)
 
     seen.unpersist()
     spark.catalog.clearCache()
     shutil.rmtree(cuckoo_dir, ignore_errors=True)
-    shutil.rmtree(bloom_dir, ignore_errors=True)
 
     wall = time.time() - wall0
     steal_sec = (_steal_ticks() - steal0) / 100.0

@@ -74,38 +74,18 @@ def test_wave_metrics_match_oracle(spark, corpus, engine_result):
     assert got == want
 
 
-def test_no_bloom_same_result(spark, corpus, tmp_path_factory):
-    """The Bloom prefilter is an optimization only — disabling it must not
-    change the seen set (false negatives impossible)."""
-    store = SnapshotStore(str(tmp_path_factory.mktemp("state_nb")))
-    eng = CrawlEngine(
-        spark, store, corpus["pages"], corpus["robots"], corpus["politeness"],
-        use_bloom=False,
-    )
-    eng.run(corpus["seeds"], max_waves=2)
-    store2 = SnapshotStore(str(tmp_path_factory.mktemp("state_b")))
-    eng2 = CrawlEngine(
-        spark, store2, corpus["pages"], corpus["robots"], corpus["politeness"],
-        use_bloom=True,
-    )
-    eng2.run(corpus["seeds"], max_waves=2)
-    assert {r.canon_url for r in eng.seen().collect()} == {
-        r.canon_url for r in eng2.seen().collect()
-    }
-
-
 def test_bucketed_bloom_same_result_and_persists(spark, corpus, tmp_path_factory):
-    """use_bloom='bucketed' (per-bucket bitmap files, executor-merged) must
-    produce the identical seen set, write one file per touched bucket, and
-    keep working across an engine restart (store reopened, superset
-    invariant held)."""
+    """The maintained seen store (use_bloom='cuckoo': per-bucket cuckoo
+    table files, executor-merged) must produce the identical seen set,
+    write one file per touched bucket, and keep working across an engine
+    restart (store reopened and adopted, superset invariant held)."""
     import os
 
     root = str(tmp_path_factory.mktemp("state_bb"))
     store = SnapshotStore(root)
     eng = CrawlEngine(
         spark, store, corpus["pages"], corpus["robots"], corpus["politeness"],
-        use_bloom="bucketed",
+        use_bloom="cuckoo",
     )
     eng.run(corpus["seeds"], max_waves=2)
     baseline_store = SnapshotStore(str(tmp_path_factory.mktemp("state_bc")))
@@ -117,13 +97,15 @@ def test_bucketed_bloom_same_result_and_persists(spark, corpus, tmp_path_factory
     assert {r.canon_url for r in eng.seen().collect()} == {
         r.canon_url for r in base.seen().collect()
     }
-    blooms = [f for f in os.listdir(os.path.join(root, "bloom")) if f.endswith(".bloom")]
-    assert blooms, "no per-bucket bitmap files written"
+    tables = [f for f in os.listdir(os.path.join(root, "bloom")) if f.endswith(".cuckoo")]
+    assert tables, "no per-bucket cuckoo table files written"
     # restart: a fresh engine reopens the store and continues identically
     eng2 = CrawlEngine(
         spark, SnapshotStore(root), corpus["pages"], corpus["robots"],
-        corpus["politeness"], use_bloom="bucketed",
+        corpus["politeness"], use_bloom="cuckoo",
     )
+    # adopted, not rebuilt: the reopened store is current with seen
+    assert eng2._seen_store.watermark() == eng2.store.latest("seen")["id"]
     base.run(max_waves=1)
     eng2.run(max_waves=1)
     assert {r.canon_url for r in eng2.seen().collect()} == {

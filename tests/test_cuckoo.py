@@ -139,11 +139,16 @@ class TestStore:
         assert st2.watermark() == 17
 
     def test_open_rejects_bloom_store_root(self, tmp_path):
-        from literature_crawler_spark.operators.bloom import BucketedBloomStore
+        """A root left by the retired Bloom store (its ``_params.json`` has
+        no ``kind``) must read as absent, so the engine recreates it."""
+        import json
 
-        root = str(tmp_path / "c6")
-        BucketedBloomStore.create(root, expected_items=1000)
-        assert BucketedCuckooStore.open(root) is None
+        root = tmp_path / "c6"
+        root.mkdir()
+        (root / "_params.json").write_text(
+            json.dumps({"n_buckets": 64, "n_bits": 16384, "k": 7})
+        )
+        assert BucketedCuckooStore.open(str(root)) is None
 
 
 # ----------------------------------------------------------- engine ----
@@ -206,7 +211,7 @@ class TestEngineWiring:
         probed = (
             eng.frontier()
             .filter(F.col("canon_url") == victim.canon_url)
-            .withColumn("h", eng._bloom_store.might_contain_col(F.col("url_hash")))
+            .withColumn("h", eng._seen_store.might_contain_col(F.col("url_hash")))
         )
         assert probed.filter("h").count() == 1
         # next wave re-schedules the requeued row (same seq, new wave)
@@ -231,34 +236,35 @@ class TestEngineWiring:
         gone = (
             eng.frontier()
             .filter(F.col("canon_url") == victim2.canon_url)
-            .withColumn("h", eng._bloom_store.might_contain_col(F.col("url_hash")))
+            .withColumn("h", eng._seen_store.might_contain_col(F.col("url_hash")))
         )
         assert gone.filter("h").count() == 0
 
-    def test_retract_rebuilds_bloom_store(self, spark, tmp_path):
-        """Bloom bitmaps cannot delete: retract must rebuild the store
-        from the new seen, and the rebuilt store must still cover every
-        remaining key (superset invariant)."""
-        from pyspark.sql import functions as F
+        # nothing eligible: zeros, whether no key matches or no matched
+        # row changes status (a pending row requeued)
+        nope = spark.createDataFrame([("https://nowhere.example/x",)], "url string")
+        assert eng.retract(nope) == {"retracted": 0, "matched": 0, "requeued": 0}
+        pending = eng.frontier().filter(F.col("status") == "pending").limit(1).collect()[0]
+        out3 = eng.retract(
+            spark.createDataFrame([(pending.canon_url,)], "url string"), requeue=True
+        )
+        assert out3 == {"retracted": 0, "matched": 1, "requeued": 0}
 
+    def test_use_bloom_accepts_only_cuckoo_modes(self, spark, tmp_path):
+        """The Bloom modes are retired: only 'auto', 'cuckoo' and False
+        construct an engine; anything else raises instead of silently
+        picking a path."""
         from literature_crawler_spark.plans.crawl import CrawlEngine
         from literature_crawler_spark.plans.state import SnapshotStore
         from literature_crawler_spark.sources import synthetic as syn
 
-        pages = syn.generate_pages(spark, 150, 5, with_images=False)
-        seeds = syn.generate_seeds(spark, 12, 150, 5)
-        store = SnapshotStore(str(tmp_path / "rb"))
-        eng = CrawlEngine(spark, store, pages, use_bloom="bucketed")
-        eng.run(seeds, max_waves=2)
-        victim = eng.crawl_order().orderBy("seq").limit(1).collect()[0]
-        out = eng.retract(
-            spark.createDataFrame([(victim.canon_url,)], "url string")
-        )
-        assert out["retracted"] == 1
-        remaining = eng.seen().withColumn(
-            "h", eng._bloom_store.might_contain_col(F.col("url_hash"))
-        )
-        assert remaining.filter(~F.col("h")).count() == 0
+        pages = syn.generate_pages(spark, 20, 2, with_images=False)
+        store = SnapshotStore(str(tmp_path / "modes"))
+        for mode in (True, "bucketed", "x"):
+            with pytest.raises(ValueError, match="use_bloom"):
+                CrawlEngine(spark, store, pages, use_bloom=mode)
+        for mode in ("auto", "cuckoo", False):
+            assert CrawlEngine(spark, store, pages, use_bloom=mode).use_bloom == mode
 
     def test_engine_overflow_rebuild(self, spark, tmp_path, monkeypatch):
         """Force a tiny store so wave merges overflow: the engine must
@@ -310,18 +316,18 @@ class TestEngineWiring:
         store = SnapshotStore(str(tmp_path / "alt"))
         eng = CrawlEngine(spark, store, pages, use_bloom="cuckoo", n_buckets=8)
         eng.run(seeds, max_waves=2)
-        rows0 = eng._bloom_store.bucket_rows
+        rows0 = eng._seen_store.bucket_rows
         sizes = []
         for _ in range(4):
-            eng._bloom_store.set_watermark(-1)  # force the refresh path
+            eng._seen_store.set_watermark(-1)  # force the refresh path
             eng = CrawlEngine(spark, store, pages, use_bloom="cuckoo", n_buckets=8)
-            sizes.append(eng._bloom_store.bucket_rows)
+            sizes.append(eng._seen_store.bucket_rows)
         assert set(sizes) == {sizes[0]}, f"capacity drifted across refreshes: {sizes}"
         assert sizes[0] <= rows0
         # superset invariant survives the rebuilds: every seen key probes true
         miss = (
             eng.seen()
-            .withColumn("h", eng._bloom_store.might_contain_col(F.col("url_hash")))
+            .withColumn("h", eng._seen_store.might_contain_col(F.col("url_hash")))
             .filter(~F.col("h"))
             .count()
         )
@@ -348,12 +354,12 @@ class TestEngineWiring:
         eng = CrawlEngine(spark, store, pages, use_bloom="auto", n_buckets=8)
         eng.run(seeds, max_waves=2)
         # 25 seeds + wave-1 discoveries >> 30: the store must exist now
-        assert isinstance(eng._bloom_store, cuckoo_mod.BucketedCuckooStore)
-        assert eng._bloom_store.watermark() is not None
+        assert isinstance(eng._seen_store, cuckoo_mod.BucketedCuckooStore)
+        assert eng._seen_store.watermark() is not None
 
         # resume in a fresh engine: the store is re-adopted, still cuckoo
         eng2 = CrawlEngine(spark, store, pages, use_bloom="auto", n_buckets=8)
-        assert isinstance(eng2._bloom_store, cuckoo_mod.BucketedCuckooStore)
+        assert isinstance(eng2._seen_store, cuckoo_mod.BucketedCuckooStore)
         eng2.run_wave(3)
 
         exact = SnapshotStore(str(tmp_path / "exact"))

@@ -168,21 +168,47 @@ def _load_bench():
 
 
 def test_store_leg_divergence_flag():
-    """bench.py's in-artifact sanity flag (VERDICT r4 item 8): the two
-    maintained-store legs run the same kernel on the same input, so a
-    >3x throughput gap marks a contaminated leg."""
+    """bench.py's in-artifact sanity flag (VERDICT r4 item 8): the cuckoo
+    leg's fastest and slowest clean reps run the same kernel on the same
+    input, so a >2x throughput spread marks a contaminated leg."""
     bench = _load_bench()
 
     ok = bench.store_leg_divergence(3_180_000, 2_590_000)
     assert ok == {"ratio": 1.23, "suspect": False}
-    # run F's outlier pattern: cuckoo 0.89M vs bucketed 3.2M
+    # run F's outlier pattern: a 0.89M rep next to 3.2M reps
     bad = bench.store_leg_divergence(3_200_000, 890_000)
     assert bad["suspect"] and bad["ratio"] > 3
+    assert bench.store_leg_divergence(3_000_000, 1_400_000)["suspect"]
     # symmetric + zero-safe
     assert bench.store_leg_divergence(0, 1000)["suspect"]
     assert (
         bench.store_leg_divergence(890_000, 3_200_000)["ratio"] == bad["ratio"]
     )
+
+
+def test_bench_frontier_legs_smoke(spark, monkeypatch):
+    """bench.py's frontier legs run end to end on a small input and emit
+    every key the artifact and its compact stdout line carry, so a dropped
+    leg or a broken import fails here instead of in the next bench run.
+    The steal counter is stubbed so no rep is rejected as dirty."""
+    bench = _load_bench()
+    monkeypatch.setattr(bench, "_steal_ticks", lambda: 0)
+    cpus = spark.sparkContext.defaultParallelism
+
+    small = bench.bench_frontier(spark, 20_000, cpus)
+    assert small["seen_size"] == 6_667
+    assert {
+        "sec", "urls_per_sec", "broadcast_path_urls_per_sec",
+        "cuckoo_path_urls_per_sec",
+    } <= small.keys()
+    assert small["clean_reps"] == {"broadcast": 2, "cuckoo": 3}
+
+    large = bench.bench_frontier_large_seen(spark, 20_000, cpus)
+    assert large["seen_size"] == 40_000
+    assert large["cuckoo_urls_per_sec"] > 0
+    assert large["shuffle_antijoin_urls_per_sec"] > 0
+    assert set(large["store_leg_divergence"]) == {"ratio", "suspect"}
+    assert large["clean_reps"] == {"cuckoo": 3, "shuffle_antijoin": 2}
 
 
 def test_bench_stdout_line_always_fits():

@@ -11,7 +11,6 @@ import string
 
 import numpy as np
 import pyarrow as pa
-import pytest
 from pyspark.sql import functions as F
 
 from literature_crawler_spark.functions import npxxhash
@@ -98,13 +97,11 @@ def test_chunked_and_large_string():
     np.testing.assert_array_equal(plain, large)
 
 
-@pytest.mark.parametrize("store_kind", ["bloom", "cuckoo"])
-def test_fused_kernel_equals_unfused(spark, tmp_path, store_kind):
-    """canonicalize_candidates(probe_store=...) (hash+probe inside the
-    Arrow kernel, ONE crossing) must yield the identical deduped set and
-    identical url_hash values as the unfused pipeline (JVM xxhash64 +
-    pandas_udf probe)."""
-    from literature_crawler_spark.operators import bloom as bloom_mod
+def test_fused_kernel_equals_unfused(spark, tmp_path):
+    """canonicalize_candidates(probe_store=...) (hash + cuckoo probe inside
+    the Arrow kernel, ONE crossing) must yield the JVM's url_hash values
+    and, after the split anti-join, exactly the rows of the plain exact
+    anti-join."""
     from literature_crawler_spark.operators import cuckoo as cuckoo_mod
     from literature_crawler_spark.operators import frontier as fr
 
@@ -123,10 +120,9 @@ def test_fused_kernel_equals_unfused(spark, tmp_path, store_kind):
     ).select("url_hash").persist()
     seen_n = seen.count()
 
-    kind = bloom_mod.BucketedBloomStore if store_kind == "bloom" else (
-        cuckoo_mod.BucketedCuckooStore
+    store = cuckoo_mod.BucketedCuckooStore.create(
+        str(tmp_path / "cuckoo"), expected_items=5000, n_buckets=8
     )
-    store = kind.create(str(tmp_path / store_kind), expected_items=5000, n_buckets=8)
     store.merge(seen)
 
     cand_f = fr.canonicalize_candidates(
@@ -139,13 +135,9 @@ def test_fused_kernel_equals_unfused(spark, tmp_path, store_kind):
         .count()
         == 0
     )
-    new_f = fr.dedup_against_seen(
-        spark, cand_f, seen, use_bloom=True, expected_seen=seen_n, bloom_store=store
-    )
+    new_f = fr.dedup_against_seen(spark, cand_f, seen, expected_seen=seen_n)
     cand_u = fr.canonicalize_candidates(urls(spark.range(3000)), output_cols=["id"])
-    new_u = fr.dedup_against_seen(
-        spark, cand_u, seen, use_bloom=True, expected_seen=seen_n, bloom_store=store
-    )
+    new_u = cand_u.join(seen, "url_hash", "left_anti")
     got = sorted(r.canon_url for r in new_f.select("canon_url").collect())
     want = sorted(r.canon_url for r in new_u.select("canon_url").collect())
     assert got == want

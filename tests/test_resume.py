@@ -116,10 +116,10 @@ def test_per_partition_lineage(spark, corpus, tmp_path):
 
 
 def test_bucketed_bloom_staleness_remerge(spark, corpus, tmp_path):
-    """A pre-existing bucketed Bloom store BEHIND the committed seen set
-    (interleaved runs with a different use_bloom mode) must be detected on
-    engine open and re-merged — a stale store gives Bloom false negatives,
-    re-crawling seen URLs and appending duplicates to seen."""
+    """A pre-existing cuckoo seen store BEHIND the committed seen set
+    (interleaved runs with use_bloom=False) must be detected on engine
+    open and rebuilt — a stale store gives false negatives, re-crawling
+    seen URLs and appending duplicates to seen."""
 
     def mk(path, mode):
         return CrawlEngine(
@@ -127,17 +127,17 @@ def test_bucketed_bloom_staleness_remerge(spark, corpus, tmp_path):
             corpus["robots"], corpus["politeness"], use_bloom=mode,
         )
 
-    straight = mk(str(tmp_path / "s"), "bucketed")
+    straight = mk(str(tmp_path / "s"), "cuckoo")
     straight.run(corpus["seeds"], max_waves=3)
 
     p = str(tmp_path / "x")
-    first = mk(p, "bucketed")  # store created, watermark at wave-1 seen
+    first = mk(p, "cuckoo")  # store created, watermark at wave-1 seen
     first.run(corpus["seeds"], max_waves=1)
     mid = mk(p, False)  # plain anti-join: seen advances, store does NOT
     mid.run(max_waves=1)
-    resumed = mk(p, "bucketed")  # open must detect store-behind-seen
+    resumed = mk(p, "cuckoo")  # open must detect store-behind-seen
     assert (
-        resumed._bloom_store.watermark()
+        resumed._seen_store.watermark()
         == resumed.store.latest("seen")["id"]
     )
     resumed.run(max_waves=1)
@@ -242,7 +242,7 @@ def test_crash_window_heal_cuckoo_single_copy(spark, corpus, tmp_path):
     )
     assert healed_keys  # the crash window is open
     # every healed key is already in the store (merged before the crash)
-    pre = resumed._bloom_store.probe_np(
+    pre = resumed._seen_store.probe_np(
         np.array([r.url_hash for r in healed_keys], dtype=np.int64)
     )
     assert pre.all()
@@ -266,7 +266,7 @@ def test_crash_window_heal_cuckoo_single_copy(spark, corpus, tmp_path):
     )
     assert out["retracted"] == 1
     # exactly one fingerprint copy existed: one delete clears the store
-    assert not resumed._bloom_store.probe_np(
+    assert not resumed._seen_store.probe_np(
         np.array([victim.url_hash], dtype=np.int64)
     )[0]
 

@@ -1,10 +1,7 @@
-"""RIS parser + synthetic corpus determinism + Bloom filter properties."""
+"""RIS parser + synthetic corpus determinism + robots parsing and matching."""
 
 import os
 
-import numpy as np
-
-from literature_crawler_spark.operators import bloom
 from literature_crawler_spark.sources import ris, synthetic as syn
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "sample.ris")
@@ -40,47 +37,6 @@ def test_python_corpus_mirrors_spark(spark):
     spark_side = {r.url: (r.host, list(r.links)) for r in pages}
     py_side = {v["url"]: (v["host"], v["links"]) for v in mirror.values()}
     assert spark_side == py_side
-
-
-def test_bloom_no_false_negatives_and_fpp(spark):
-    df = spark.range(20000).selectExpr("xxhash64(id) as h")
-    bf = bloom.build_bloom(df, "h", expected_items=20000, fpp=0.01)
-    members = np.array([r.h for r in df.collect()])
-    assert bf.might_contain(members).all()  # zero false negatives
-    rng = np.random.default_rng(7)
-    probes = rng.integers(-(2**62), 2**62, size=20000)
-    fresh = probes[~np.isin(probes, members)]
-    fpp = bf.might_contain(fresh).mean()
-    assert fpp < 0.03, fpp
-
-
-def test_bucketed_bloom_store(spark, tmp_path):
-    """Per-bucket store: executor-side build (driver sees only counts),
-    zero false negatives, bounded fpp, incremental merge, missing-bucket
-    probe = False."""
-    root = str(tmp_path / "bloom")
-    st = bloom.BucketedBloomStore.create(root, expected_items=20000, n_buckets=16)
-    df = spark.range(20000).selectExpr("xxhash64(id) as url_hash")
-    counts = st.merge(df)
-    assert sum(counts.values()) == 20000 and len(counts) == 16
-    assert all(isinstance(v, int) for v in counts.values())  # counts only
-
-    probed = df.withColumn("m", st.might_contain_col(bloom.F.col("url_hash")))
-    assert probed.filter("NOT m").count() == 0  # zero false negatives
-
-    fresh = spark.range(20000, 40000).selectExpr("xxhash64(id * 7919 + 13) as url_hash")
-    fpp = fresh.withColumn("m", st.might_contain_col(bloom.F.col("url_hash"))).filter("m").count() / 20000
-    assert fpp < 0.05, fpp
-
-    # incremental merge: new keys OR into the existing files
-    st2 = bloom.BucketedBloomStore.open(root)
-    st2.merge(fresh)
-    assert fresh.withColumn("m", st2.might_contain_col(bloom.F.col("url_hash"))).filter("NOT m").count() == 0
-    assert probed.filter("NOT m").count() == 0  # old keys still present
-
-    # a store with no files: everything is definitely-new
-    st3 = bloom.BucketedBloomStore.create(str(tmp_path / "empty"), expected_items=100)
-    assert df.withColumn("m", st3.might_contain_col(bloom.F.col("url_hash"))).filter("m").count() == 0
 
 
 ROBOTS_BODY = """# comment line

@@ -118,3 +118,59 @@ def test_merge_commit_carries_wave_meta(spark, store):
     latest = store.latest("m")
     assert latest["wave"] == 4
     assert latest["meta"].get("n") == 2
+
+
+class _RecordingSpark:
+    """Stand-in for a SparkSession over an Iceberg catalog: records every
+    SQL statement, and a MERGE creates a new head snapshot only when
+    ``merge_changes`` says the source changed rows."""
+
+    def __init__(self, merge_changes: bool) -> None:
+        self.sql_log: list[str] = []
+        self.head = 7
+        self.merge_changes = merge_changes
+        self.catalog = type("Catalog", (), {"dropTempView": lambda self, v: None})()
+
+    def sql(self, q: str):
+        self.sql_log.append(q)
+        if q.startswith("MERGE INTO") and self.merge_changes:
+            self.head += 1
+
+
+class _SourceDf:
+    def createOrReplaceTempView(self, name: str) -> None:
+        pass
+
+    def writeTo(self, ident: str):
+        return self
+
+    def option(self, key: str, value: str):
+        return self
+
+
+@pytest.mark.parametrize("changes", [False, True])
+def test_iceberg_merge_writes_manifest_only_for_new_snapshot(monkeypatch, changes):
+    """A MERGE that changes no row creates no Iceberg snapshot; the store
+    must then leave the previous snapshot's ``lcs-manifest-<id>`` alone
+    instead of overwriting it with this commit's wave and meta."""
+    from literature_crawler_spark.plans.iceberg_state import IcebergSnapshotStore
+
+    spark = _RecordingSpark(merge_changes=changes)
+    store = IcebergSnapshotStore(spark, "cat", "ns")
+    monkeypatch.setattr(store, "_exists", lambda table: True)
+    monkeypatch.setattr(
+        store, "latest",
+        lambda table: {"id": spark.head, "mode": "merge", "wave": 1, "meta": {}},
+    )
+    sid = store.commit(
+        "frontier", _SourceDf(), mode="merge", wave=2, meta={"pending": 3},
+        merge_key=["url_hash"],
+    )
+    alters = [q for q in spark.sql_log if q.startswith("ALTER TABLE")]
+    if changes:
+        assert sid == 8
+        assert len(alters) == 1 and "'lcs-manifest-8'" in alters[0]
+        assert '"wave": 2' in alters[0]
+    else:
+        assert sid == 7
+        assert alters == []
