@@ -11,9 +11,14 @@ CoNEXT 2014 — public) supports O(1) delete of previously-inserted keys at
 comparable space and a LOWER false-positive rate, so the seen store
 follows the seen table's MERGE deltas in both directions.
 
-Layout: one file per ``pmod(url_hash, n_buckets)`` bucket, executor-side
-single-writer merge, lazy process-cache probe, seen-snapshot watermark.
-``CrawlEngine`` fuses ``probe_np`` into the canonicalize kernel
+Layout: one file per ``pmod(url_hash, n_buckets)`` bucket and generation,
+executor-side single-writer merge, lazy process-cache probe. A merge or
+delete writes new files for the buckets it touches and never rewrites
+one; the store's descriptor (table size, generation, bucket -> generation
+map) names the live files. ``CrawlEngine`` commits the descriptor in each
+seen snapshot's manifest, so the store a resumed engine adopts is exactly
+the generation of the seen set it resumes from. ``CrawlEngine`` fuses
+``probe_np`` into the canonicalize kernel
 (``frontier.canonicalize_candidates(probe_store=...)``), and
 ``frontier.dedup_against_seen`` sends only the maybe-seen rows through
 the exact anti-join.
@@ -30,31 +35,32 @@ power of two; fingerprints are 16-bit (0 remaps to 1 so 0 can mean
 filter at the usual fpp=0.01.
 
 Resize contract: tables are sized at ``create(expected_items)``.
-Fingerprints cannot recover their keys, so a
-bucket that overflows CANNOT grow in place without risking the superset
-invariant (a dropped key = false negative = re-crawled duplicate).
-Overflow therefore surfaces as ``CuckooOverflow`` on the driver, and the
-owner (CrawlEngine holds the authoritative committed ``seen`` table)
-rebuilds: ``create(root, 2x)`` + ``merge(seen ∪ delta)``. This is the
-standard production answer to cuckoo resize — rebuild from source.
+Fingerprints cannot recover their keys, so a bucket that overflows CANNOT
+grow in place without dropping keys (a dropped key = false negative =
+re-crawled duplicate). Overflow therefore surfaces as ``CuckooOverflow``
+on the driver with the descriptor unchanged, and the owner (CrawlEngine
+holds the authoritative committed ``seen`` table) rebuilds:
+``create(root, 2x)`` + ``merge(seen ∪ delta)``. The rebuild is a new
+generation of every bucket; the old generation stays live until the
+owner commits the new descriptor. This is the standard production answer
+to cuckoo resize — rebuild from source.
 
 Deletion caveat (inherent, same as counting Bloom): deleting a key that
 was never inserted can evict another key's identical fingerprint and
 create a false negative. The engine only ever deletes keys read back
-from the committed ``seen`` table, which the merge path inserted.
+from the committed ``seen`` table, and each of those was inserted exactly
+once into the generation that seen snapshot names.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Any
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 SLOTS = 4  # slots per table row (the paper's b=4 sweet spot)
 MAX_KICKS = 500
@@ -178,128 +184,124 @@ class _Table:
         return removed
 
 
-# Process-local probe cache, keyed by (path, mtime_ns) so a merged
-# (rewritten) bucket file invalidates its stale entry.
-_TABLE_CACHE: dict[tuple[str, int], np.ndarray] = {}
+# Process-local probe cache: bucket stem -> (generation file, table). A
+# generation file is written once and never rewritten (see
+# BucketedCuckooStore), so its path alone identifies its contents; one
+# entry per bucket keeps only the generation probed last.
+_TABLE_CACHE: dict[str, tuple[str, np.ndarray]] = {}
 _TABLE_CACHE_CAP = 256
 
 
-def _load_table(path: str) -> np.ndarray | None:
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        return None
-    key = (path, mtime)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
+def _load_table(path: str) -> np.ndarray:
+    stem = path.rsplit(".g", 1)[0]
+    hit = _TABLE_CACHE.get(stem)
+    if hit is not None and hit[0] == path:
+        return hit[1]
     arr = np.fromfile(path, dtype=np.uint16).reshape(-1, SLOTS)
-    for old in [kk for kk in _TABLE_CACHE if kk[0] == path]:
-        del _TABLE_CACHE[old]
+    _TABLE_CACHE.pop(stem, None)
     while len(_TABLE_CACHE) >= _TABLE_CACHE_CAP:
         del _TABLE_CACHE[next(iter(_TABLE_CACHE))]
-    _TABLE_CACHE[key] = arr
+    _TABLE_CACHE[stem] = (path, arr)
     return arr
 
 
-class BucketedCuckooStore:
-    """One cuckoo-filter FILE per ``pmod(url_hash, n_buckets)`` bucket.
+def _gen_path(root: str, bucket: int, gen: int) -> str:
+    return os.path.join(root, f"b{bucket:05d}.g{gen:06d}.cuckoo")
 
-    Lifecycle (``create``/``open``), ``merge``, ``delete``, probe and a
-    seen-snapshot watermark — built and probed entirely on executors; the
-    driver only ever sees per-bucket counts.
+
+def _write_table(arr: np.ndarray, path: str) -> None:
+    tmp = f"{path}.tmp.{os.getpid()}"
+    arr.tofile(tmp)
+    os.replace(tmp, path)
+
+
+class BucketedCuckooStore:
+    """One cuckoo-filter FILE per ``pmod(url_hash, n_buckets)`` bucket and
+    generation, described by a small JSON-ready descriptor.
+
+    ``merge`` and ``delete`` never rewrite a file: each bucket they touch
+    is read from the current generation and written as a new file
+    ``b{bucket:05d}.g{gen:06d}.cuckoo``; the instance's descriptor then
+    names the new generation. The owner commits the descriptor with the
+    key set it describes (``CrawlEngine`` puts it in each seen manifest)
+    and resumes by adopting it, so a crash between a merge and that
+    commit leaves only unnamed files, and a retried fold rewrites its own
+    new file from the same immutable parent. Tables are built and probed
+    on executors; the driver only ever sees per-bucket counts.
     """
 
-    def __init__(self, root: str, n_buckets: int, bucket_rows: int) -> None:
+    def __init__(
+        self, root: str, n_buckets: int, bucket_rows: int,
+        gen: int = 0, files: dict[int, int] | None = None,
+    ) -> None:
+        os.makedirs(root, exist_ok=True)
         self.root = root
         self.n_buckets = n_buckets
         self.bucket_rows = bucket_rows
+        self.gen = gen
+        self.files = dict(files or {})  # bucket -> generation of its file
 
     # ------------------------------------------------------- lifecycle ----
     @classmethod
     def create(
         cls, root: str, expected_items: int, n_buckets: int = 64
     ) -> "BucketedCuckooStore":
-        """Size each bucket's table for expected_items/n_buckets keys."""
-        bucket_rows = rows_for(max(expected_items // n_buckets, 1))
-        os.makedirs(root, exist_ok=True)
-        import glob as _glob
-
-        for stale in _glob.glob(os.path.join(root, "b*.cuckoo")):
-            os.remove(stale)
-        try:
-            os.remove(os.path.join(root, "_watermark.json"))
-        except OSError:
-            pass
-        with open(os.path.join(root, "_params.json"), "w") as f:
-            json.dump(
-                {
-                    "kind": "cuckoo",
-                    "n_buckets": n_buckets,
-                    "bucket_rows": bucket_rows,
-                    "slots": SLOTS,
-                },
-                f,
-            )
-        return cls(root, n_buckets, bucket_rows)
+        """An empty store sized for expected_items/n_buckets keys a bucket."""
+        return cls(root, n_buckets, rows_for(max(expected_items // n_buckets, 1)))
 
     @classmethod
-    def open(cls, root: str) -> "BucketedCuckooStore | None":
-        try:
-            with open(os.path.join(root, "_params.json")) as f:
-                p = json.load(f)
-        except OSError:
-            return None
-        if p.get("kind") != "cuckoo":
-            return None
-        return cls(root, p["n_buckets"], p["bucket_rows"])
+    def adopt(cls, root: str, descriptor: dict) -> "BucketedCuckooStore":
+        """The store a committed ``descriptor`` names."""
+        d = descriptor
+        files = {int(b): g for b, g in d["files"].items()}
+        return cls(root, d["n_buckets"], d["bucket_rows"], d["gen"], files)
 
-    def bucket_path(self, bucket: int) -> str:
-        return os.path.join(self.root, f"b{bucket:05d}.cuckoo")
+    def descriptor(self) -> dict:
+        return {
+            "n_buckets": self.n_buckets,
+            "bucket_rows": self.bucket_rows,
+            "gen": self.gen,
+            "files": {str(b): g for b, g in sorted(self.files.items())},
+        }
 
-    # ------------------------------------------------------- watermark ----
-    def watermark(self) -> int | None:
-        try:
-            with open(os.path.join(self.root, "_watermark.json")) as f:
-                return json.load(f)["seen_snapshot"]
-        except (OSError, KeyError, ValueError):
-            return None
+    def paths(self) -> dict[int, str]:
+        """bucket -> table file of the current generation."""
+        return {b: _gen_path(self.root, b, g) for b, g in self.files.items()}
 
-    def set_watermark(self, seen_snapshot: int) -> None:
-        path = os.path.join(self.root, "_watermark.json")
-        tmp = f"{path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"seen_snapshot": seen_snapshot}, f)
-        os.replace(tmp, path)
+    def drop_unnamed(self) -> None:
+        """Delete every file under root that the current generation does
+        not name (superseded generations, leftovers of a crashed write)."""
+        named = {os.path.basename(p) for p in self.paths().values()}
+        for name in os.listdir(self.root):
+            if name not in named:
+                os.remove(os.path.join(self.root, name))
 
     # ----------------------------------------------------------- merge ----
     def merge(self, df: DataFrame, hash_col: str = "url_hash") -> dict[int, int]:
-        """Insert a delta of hash keys into the per-bucket files.
+        """Insert a delta of hash keys as a new generation.
 
         One shuffle of keys on the bucket id; each bucket group inserts
-        into its table IN THE EXECUTOR TASK (atomic tmp+rename, single
-        writer per bucket). An overflowing bucket leaves its existing
-        file UNTOUCHED and reports failure; the driver then raises
-        ``CuckooOverflow`` so the owner rebuilds from the authoritative
-        key set (see module docstring) — committing a partial table would
-        silently drop keys, i.e. manufacture false negatives.
+        into a copy of its current table IN THE EXECUTOR TASK and writes
+        the next generation's file. An overflowing bucket writes nothing
+        and reports failure; the driver then raises ``CuckooOverflow``
+        without advancing the descriptor, so the owner rebuilds from the
+        authoritative key set (see module docstring) — committing a
+        partial table would silently drop keys, i.e. manufacture false
+        negatives.
         """
         root, bucket_rows = self.root, self.bucket_rows
+        gen, parents = self._next_gen(), self.paths()
 
         def fold(key, pdf):
             b = int(key[0])
             h = pdf[hash_col].to_numpy()
-            path = os.path.join(root, f"b{b:05d}.cuckoo")
-            existing = _load_table(path)
-            if existing is not None:
-                table = _Table(existing.copy())
+            if b in parents:
+                table = _Table(_load_table(parents[b]).copy())
             else:
                 table = _Table(np.zeros((bucket_rows, SLOTS), dtype=np.uint16))
             failed = table.insert_batch(h)
             if failed == 0:
-                tmp = f"{path}.tmp.{os.getpid()}"
-                table.arr.tofile(tmp)
-                os.replace(tmp, path)
+                _write_table(table.arr, _gen_path(root, b, gen))
             return pd.DataFrame(
                 {"bucket": [b], "n_keys": [len(h)], "n_failed": [failed]}
             )
@@ -314,31 +316,41 @@ class BucketedCuckooStore:
                 f"({self.bucket_rows} rows x {SLOTS} slots); rebuild: "
                 f"create(root, 2x expected) + merge(full key set)"
             )
+        self._advance(gen, [r["bucket"] for r in rows])
         return {r["bucket"]: r["n_keys"] for r in rows}
 
     def delete(self, df: DataFrame, hash_col: str = "url_hash") -> dict[int, int]:
-        """Remove previously-inserted keys (the retract path). Same
-        single-writer-per-bucket shape as merge."""
-        root = self.root
+        """Remove previously-inserted keys (the retract path) as a new
+        generation. Same one-task-per-bucket shape as merge; a bucket
+        without a file holds no keys, so it writes nothing."""
+        root, gen, parents = self.root, self._next_gen(), self.paths()
 
         def fold(key, pdf):
             b = int(key[0])
             h = pdf[hash_col].to_numpy()
-            path = os.path.join(root, f"b{b:05d}.cuckoo")
-            existing = _load_table(path)
             removed = 0
-            if existing is not None and len(h):
-                table = _Table(existing.copy())
+            if b in parents and len(h):
+                table = _Table(_load_table(parents[b]).copy())
                 removed = table.delete_batch(h)
-                tmp = f"{path}.tmp.{os.getpid()}"
-                table.arr.tofile(tmp)
-                os.replace(tmp, path)
+                _write_table(table.arr, _gen_path(root, b, gen))
             return pd.DataFrame({"bucket": [b], "n_removed": [removed]})
 
         rows = self._fold_by_bucket(
             df, hash_col, fold, out="bucket int, n_removed long"
         )
+        self._advance(gen, [r["bucket"] for r in rows if r["bucket"] in parents])
         return {r["bucket"]: r["n_removed"] for r in rows}
+
+    def _next_gen(self) -> int:
+        """One past every generation under root, a crashed writer's files
+        included, so no write reuses a path: the probe cache keys on it."""
+        names = [n for n in os.listdir(self.root) if n.startswith("b") and ".g" in n]
+        return 1 + max([self.gen] + [int(n.split(".g", 1)[1][:6]) for n in names])
+
+    def _advance(self, gen: int, buckets: list[int]) -> None:
+        if buckets:
+            self.gen = gen
+            self.files.update((b, gen) for b in buckets)
 
     def _fold_by_bucket(
         self, df: DataFrame, hash_col: str, fold, out: str
@@ -351,31 +363,22 @@ class BucketedCuckooStore:
 
     # ----------------------------------------------------------- probe ----
     def probe_np(self, hn: np.ndarray) -> np.ndarray:
-        """Vectorized membership test of an int64 hash array — the numpy
-        core shared by the ``pandas_udf`` probe and the fused canonicalize
-        kernel (``frontier.canonicalize_candidates(probe_store=...)``),
-        which calls it in-process to avoid a second Arrow crossing. One
-        table lookup per distinct bucket; a missing bucket file means no
-        keys were ever merged there, so definitely not contained. The
-        instance is picklable (root + 2 ints), so it ships inside UDF
+        """Vectorized membership test of an int64 hash array, called
+        in-process by the fused canonicalize kernel
+        (``frontier.canonicalize_candidates(probe_store=...)``) to avoid a
+        second Arrow crossing. One table lookup per distinct bucket; a
+        bucket the generation names no file for holds no keys, so
+        definitely not contained. The instance is picklable (root, ints
+        and the bucket -> generation map), so it ships inside UDF
         closures; tables load lazily through the process cache."""
         out = np.zeros(len(hn), dtype=bool)
         if len(hn) == 0:
             return out
+        paths = self.paths()
         buckets = np.mod(hn.astype(np.int64), self.n_buckets)  # == Spark pmod
         for b in np.unique(buckets):
-            arr = _load_table(self.bucket_path(int(b)))
-            if arr is not None:
+            path = paths.get(int(b))
+            if path is not None:
                 mask = buckets == b
-                out[mask] = _Table(arr).contains(hn[mask])
+                out[mask] = _Table(_load_table(path)).contains(hn[mask])
         return out
-
-    def might_contain_col(self, hash_col: Column) -> Column:
-        """Membership-test Column: a pandas UDF over ``probe_np``."""
-        store = self
-
-        @F.pandas_udf(T.BooleanType())
-        def _probe(h: pd.Series) -> pd.Series:
-            return pd.Series(store.probe_np(h.to_numpy()))
-
-        return _probe(hash_col)

@@ -31,6 +31,7 @@ budget; priority of a URL = the wave that discovered it (BFS depth).
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -147,16 +148,18 @@ class CrawlEngine:
         # analogue is data-file bin-packing on a maintenance schedule)
         self.compact_seen_every = compact_seen_every
         # The seen store. use_bloom='cuckoo' maintains a BucketedCuckooStore
-        # next to the state tables (one table file per url_hash bucket,
-        # executor-built) whose probe runs inside the canonicalize kernel;
-        # it is deletable, so retract removes keys in place. 'auto' uses
-        # the broadcast anti-join while seen is small, then SELF-UPGRADES
-        # to a maintained cuckoo store the first wave after committed seen
-        # crosses fr.BROADCAST_SEEN_MAX, and re-adopts an existing store
-        # on resume. False keeps no store (exact anti-join only).
-        # Invariant while a store exists: deltas merge into it BEFORE the
-        # seen commit, so it is always a superset of committed seen
-        # (false positives only).
+        # next to the state tables (one table file per url_hash bucket and
+        # generation, executor-built) whose probe runs inside the
+        # canonicalize kernel; it is deletable, so retract removes keys.
+        # 'auto' uses the broadcast anti-join while seen is small, then
+        # SELF-UPGRADES to a maintained cuckoo store the first wave after
+        # committed seen crosses fr.BROADCAST_SEEN_MAX. False keeps no
+        # store (exact anti-join only). Every seen commit of a store-keeping
+        # engine carries the store's descriptor, so the store holds exactly
+        # the keys of the seen snapshot that names it: an engine adopts the
+        # generation the latest seen snapshot names, and builds one from
+        # seen when that snapshot names none (written by a use_bloom=False
+        # engine or by stream ingest) or its files are gone (a rollback).
         if use_bloom is not False and use_bloom not in ("auto", "cuckoo"):
             raise ValueError(
                 f"use_bloom must be 'auto', 'cuckoo' or False, got {use_bloom!r}"
@@ -165,20 +168,15 @@ class CrawlEngine:
         self._seen_store = None
         self._store_root = os.path.join(store.root, "bloom")
         if use_bloom is not False:
-            st = cuckoo_mod.BucketedCuckooStore.open(self._store_root)
-            seen_latest = self.store.latest("seen")
-            if st is not None and seen_latest is not None:
+            seen_meta = (self.store.latest("seen") or {}).get("meta", {})
+            st = None
+            if "cuckoo" in seen_meta:
+                st = cuckoo_mod.BucketedCuckooStore.adopt(self._store_root, seen_meta["cuckoo"])
+            if st is not None and all(map(os.path.exists, st.paths().values())):
                 self._seen_store = st
-                self._refresh_adopted_store(seen_latest)
             elif use_bloom == "cuckoo":
-                # 'auto' ignores an orphan store while nothing is committed
-                # (the threshold upgrade in run_wave rebuilds from scratch)
-                self._seen_store = st or cuckoo_mod.BucketedCuckooStore.create(
-                    self._store_root, expected_items=2_000_000, n_buckets=n_buckets
-                )
-                if seen_latest is not None:  # resume a run that kept no store
-                    self._store_merge(self.seen().select("url_hash"))
-                    self._seen_store.set_watermark(seen_latest["id"])
+                # 'auto' builds its store in run_wave once seen is large
+                self._build_store(expected_items=2_000_000)
         # Optional Arrow-UDF fetch path (operators.fetch.Fetcher): when set,
         # waves fetch via mapInPandas over salt-spread partitions (the live
         # deploy path) instead of hash-joining the pages corpus table. Both
@@ -195,8 +193,12 @@ class CrawlEngine:
         # is bounded (only net-growing hosts enter, shrunk when it
         # exceeds MAX_TRACKED_HOSTS), so the driver holds O(hot hosts),
         # never O(all hosts).
+        # The estimate rides every frontier manifest, so a resumed engine
+        # makes the same choice as an uninterrupted one.
         self.two_phase = two_phase
-        self._hot_backlog: dict[str, int] = {}
+        self._hot_backlog: dict[str, int] = dict(
+            (self.store.latest("frontier") or {}).get("meta", {}).get("hot_backlog", {})
+        )
         # the fetchable web: canonical url -> (host, links, caption, image_id)
         self.pages = pages.select(
             F.col("url").alias("page_url"),
@@ -207,67 +209,51 @@ class CrawlEngine:
         ).persist()
 
     # ------------------------------------------------------------ state ----
-    def _refresh_adopted_store(self, seen_latest: dict) -> None:
-        """Staleness check for a pre-existing seen store: a store BEHIND
-        the committed seen set (e.g. interleaved runs with use_bloom=False)
-        would give false negatives -> re-crawled URLs. Cuckoo insert is
-        NOT idempotent: re-merging keys already present would ~double
-        occupancy and trip an overflow rebuild, and a crash loop between
-        merge and set_watermark would repeat that rebuild each start — so
-        the store rebuilds fresh at current capacity instead (bounded,
-        restart-idempotent)."""
-        wm = self._seen_store.watermark()
-        if wm is not None and wm >= seen_latest["id"]:
-            return
-        # Size the rebuild from the ACTUAL key count (we scan seen for the
-        # merge anyway) — sizing from slot capacity is not a fixed point of
-        # rows_for (1024-row buckets re-create as 2048), so repeated
-        # adoptions would double the table every restart with zero key
-        # growth. One count() here is engine-init only, never per-wave;
-        # bucket-skew overflow still grows via _store_merge.
-        keys = self.seen().select("url_hash").dropDuplicates(["url_hash"]).persist()
-        n_keys = keys.count()
-        st = self._seen_store
-        self._seen_store = cuckoo_mod.BucketedCuckooStore.create(
-            st.root, expected_items=max(n_keys, 1), n_buckets=st.n_buckets
-        )
-        self._store_merge(keys)
-        keys.unpersist()
-        self._seen_store.set_watermark(seen_latest["id"])
-
-    def _store_merge(self, delta: DataFrame) -> None:
-        """Merge a url_hash delta into the membership store.
-
-        A cuckoo store that overflows is rebuilt at doubled capacity from
-        the AUTHORITATIVE key set (committed seen + this delta) — the
-        resize contract in operators/cuckoo.py: fingerprints cannot
-        recover keys, so growth must re-insert from source.
-        """
+    def _build_store(self, expected_items: int, delta: DataFrame | None = None) -> None:
+        """Build the seen store from the authoritative key set: committed
+        seen plus ``delta``, keys about to be committed with it.
+        Fingerprints cannot recover their keys, so this is also how the
+        store grows (the resize contract in operators/cuckoo.py): a build
+        that overflows starts over at double the capacity."""
+        parts = [df.select("url_hash") for df in (self.seen(), delta) if df is not None]
+        keys = None
+        if parts:
+            keys = reduce(DataFrame.unionByName, parts).dropDuplicates(["url_hash"]).persist()
         try:
-            self._seen_store.merge(delta)
-            return
-        except cuckoo_mod.CuckooOverflow:
-            pass
-        full = delta.select("url_hash")
-        seen = self.seen()
-        if seen is not None:
-            full = seen.select("url_hash").unionByName(full).dropDuplicates(["url_hash"])
-        full = full.persist()
-        try:
-            st = self._seen_store
-            cap = st.bucket_rows * cuckoo_mod.SLOTS * st.n_buckets
             while True:
-                cap *= 2
                 self._seen_store = cuckoo_mod.BucketedCuckooStore.create(
-                    st.root, expected_items=cap, n_buckets=st.n_buckets
+                    self._store_root, expected_items=expected_items, n_buckets=self.n_buckets
                 )
+                if keys is None:
+                    return
                 try:
-                    self._seen_store.merge(full)
+                    self._seen_store.merge(keys)
                     return
                 except cuckoo_mod.CuckooOverflow:
-                    continue
+                    expected_items *= 2
         finally:
-            full.unpersist()
+            if keys is not None:
+                keys.unpersist()
+
+    def _store_merge(self, delta: DataFrame) -> None:
+        """Merge a url_hash delta into the seen store as its next
+        generation; a store that overflows is rebuilt at double capacity
+        from committed seen plus the delta."""
+        try:
+            self._seen_store.merge(delta)
+        except cuckoo_mod.CuckooOverflow:
+            st = self._seen_store
+            self._build_store(2 * st.bucket_rows * cuckoo_mod.SLOTS * st.n_buckets, delta)
+
+    def _commit_seen(self, df: DataFrame, mode: str, wave: int | None, meta: dict) -> None:
+        """Commit a seen snapshot with the descriptor of the store
+        generation that holds exactly its keys, then delete the store
+        files that generation does not name."""
+        if self._seen_store is not None:
+            meta = {**meta, "cuckoo": self._seen_store.descriptor()}
+        self.store.commit("seen", df, mode=mode, wave=wave, meta=meta)
+        if self._seen_store is not None:
+            self._seen_store.drop_unnamed()
 
     def seen(self) -> DataFrame | None:
         return self.store.read(self.spark, "seen")
@@ -302,10 +288,10 @@ class CrawlEngine:
         new one (two frontier rows in one merge snapshot,
         nondeterministic reader tie-break). In-flight rows are silently
         excluded; recrawling one is ``requeue=True``'s job.
-        Store maintenance follows the commit: the cuckoo store DELETEs
-        the keys in place. Ordering keeps the superset invariant: the
-        store is never behind seen — between commit and delete it holds
-        extra keys, which only cost wasted exact-join probes.
+        The cuckoo store deletes the keys as a new generation, and the
+        seen commit names it: each key was inserted exactly once into the
+        generation the previous seen snapshot names, so the delete removes
+        exactly its own fingerprint.
 
         The matched keys and the flipped frontier rows end in eager
         ``localCheckpoint`` fences, as the wave's stages do: later jobs
@@ -355,11 +341,11 @@ class CrawlEngine:
             )
             n_requeued = int(obs_flip.get["n"])
             prev_meta = (self.store.latest("frontier") or {}).get("meta", {})
-            pending = prev_meta.get("pending", 0) + n_requeued
-            # a requeue flips statuses only: the seq high-water is unchanged
-            meta = {"pending": pending, "delta_rows": n_requeued}
-            if "max_seq" in prev_meta:
-                meta["max_seq"] = prev_meta["max_seq"]
+            # a requeue flips statuses only: the seq high-water and the
+            # hot-host estimate are unchanged
+            meta = {k: prev_meta[k] for k in ("max_seq", "hot_backlog") if k in prev_meta}
+            meta["pending"] = prev_meta.get("pending", 0) + n_requeued
+            meta["delta_rows"] = n_requeued
             self.store.commit(
                 "frontier", flip, mode="merge", wave=self.last_wave(),
                 meta=meta, merge_key=["url_hash"],
@@ -369,13 +355,12 @@ class CrawlEngine:
         prev_total = (self.store.latest("seen") or {}).get("meta", {}).get("total")
         if prev_total is None:
             prev_total = seen.count()
-        sid = self.store.commit(
-            "seen", remaining, mode="replace", wave=self.last_wave(),
-            meta={"total": prev_total - n, "retracted": n},
-        )
         if self._seen_store is not None:
             self._seen_store.delete(keys)
-            self._seen_store.set_watermark(sid)
+        self._commit_seen(
+            remaining, "replace", self.last_wave(),
+            {"total": prev_total - n, "retracted": n},
+        )
         return {"retracted": n, "matched": n, "requeued": 0}
 
     def frontier(self) -> DataFrame | None:
@@ -406,15 +391,12 @@ class CrawlEngine:
             "frontier", frontier0, mode="replace", wave=0,
             meta={"pending": n, "total": n, "max_seq": n - 1},
         )
-        if self._seen_store is not None:  # superset invariant: store first
-            self._store_merge(frontier0.select("url_hash"))
-        sid = self.store.commit(
-            "seen",
-            frontier0.select("url_hash", "canon_url", "bucket", "wave"),
-            mode="append", wave=0, meta={"added": n, "total": n},
-        )
         if self._seen_store is not None:
-            self._seen_store.set_watermark(sid)
+            self._store_merge(frontier0.select("url_hash"))
+        self._commit_seen(
+            frontier0.select("url_hash", "canon_url", "bucket", "wave"),
+            "append", 0, {"added": n, "total": n},
+        )
         return n
 
     # ------------------------------------------------------------- wave ----
@@ -516,7 +498,7 @@ class CrawlEngine:
         # MAINTAINED cuckoo store (BENCH.md: cuckoo probe 2.6-3.8M URLs/s
         # at local[32], O(1) delete for retract). Built once from
         # committed seen, then merged incrementally per wave like
-        # 'cuckoo'.
+        # 'cuckoo'; this wave's seen commit names it.
         seen_meta = self.store.latest("seen")
         seen_total = (seen_meta or {}).get("meta", {}).get("total") or 0
         if (
@@ -524,15 +506,7 @@ class CrawlEngine:
             and self._seen_store is None
             and seen_total > fr.BROADCAST_SEEN_MAX
         ):
-            self._seen_store = cuckoo_mod.BucketedCuckooStore.create(
-                self._store_root,
-                expected_items=2 * seen_total,
-                n_buckets=self.n_buckets,
-            )
-            self._store_merge(
-                self.seen().select("url_hash").dropDuplicates(["url_hash"])
-            )
-            self._seen_store.set_watermark(seen_meta["id"])
+            self._build_store(expected_items=2 * seen_total)
         # when a maintained seen store exists, the seen-probe runs
         # INSIDE the canonicalize Arrow kernel (one Python crossing for
         # canonicalize+hash+membership-test instead of two — the local-mode
@@ -595,13 +569,16 @@ class CrawlEngine:
         if pending_before is None:
             pending_before = pending.count()
         n_pending_next = n_new + (pending_before - n_scheduled)
+        frontier_meta = {
+            "pending": n_pending_next, "delta_rows": n_scheduled + n_new,
+            "max_seq": max_seq + n_new,
+        }
+        if self.two_phase == "auto":
+            self._update_hot_backlog(new_rows, n_new)
+            frontier_meta["hot_backlog"] = self._hot_backlog
         self.store.commit(
             "frontier", frontier_delta, mode="merge", wave=wave,
-            meta={
-                "pending": n_pending_next, "delta_rows": n_scheduled + n_new,
-                "max_seq": max_seq + n_new,
-            },
-            merge_key=["url_hash"],
+            meta=frontier_meta, merge_key=["url_hash"],
         )
         if self.compact_every and wave % self.compact_every == 0:
             if self.store.compact("frontier") is not None and self.expire_on_compact:
@@ -610,26 +587,16 @@ class CrawlEngine:
                 # storage grows by a full table copy per compaction
                 self.store.expire_snapshots("frontier")
         seen_total = ((seen_meta or {}).get("meta", {}).get("total") or 0) + n_new
-        if self._seen_store is not None and n_new:  # store BEFORE seen commit
+        if self._seen_store is not None and n_new:
             self._store_merge(new_rows.select("url_hash"))
-        sid = self.store.commit(
-            "seen", new_rows.select("url_hash", "canon_url", "bucket", "wave"),
-            mode="append", wave=wave, meta={"added": n_new, "total": seen_total},
+        self._commit_seen(
+            new_rows.select("url_hash", "canon_url", "bucket", "wave"),
+            "append", wave, {"added": n_new, "total": seen_total},
         )
-        if self._seen_store is not None:
-            self._seen_store.set_watermark(sid)
         if self.compact_seen_every and wave % self.compact_seen_every == 0:
-            csid = self.store.compact("seen")
-            if csid is not None:
-                if self.expire_on_compact:
-                    self.store.expire_snapshots("seen")
-                if self._seen_store is not None:
-                    # membership is unchanged by compaction, so the store
-                    # is still a superset — advance the watermark so the
-                    # next engine start does not see a "stale" store and
-                    # rebuild for nothing (a crash before this line only
-                    # costs that spurious rebuild, never correctness)
-                    self._seen_store.set_watermark(csid)
+            # the compacted base copies the store descriptor with the meta
+            if self.store.compact("seen") is not None and self.expire_on_compact:
+                self.store.expire_snapshots("seen")
         self.store.commit(
             "order",
             scheduled.select(F.lit(wave).alias("wave"), "seq", "host", "canon_url"),
@@ -679,8 +646,6 @@ class CrawlEngine:
             "lineage", fetch_lineage.unionByName(dedup_lineage),
             mode="append", wave=wave,
         )
-        if self.two_phase == "auto":
-            self._update_hot_backlog(new_rows, n_new)
         return metrics
 
     @staticmethod
@@ -704,11 +669,14 @@ class CrawlEngine:
         the latest frontier manifest is ahead of the latest seen
         manifest's exactly and only inside this window (every clean wave,
         bootstrap, compaction, and both retract paths leave them equal).
-        The heal appends the missing pending keys to seen — store merge
-        first, preserving the store-superset invariant. Audit tables
-        (order/outcomes/metrics/lineage) committed after seen may still
-        miss wave W's rows; they are observability, not inputs, so a gap
-        there cannot corrupt the crawl.
+        The heal appends the missing pending keys to seen and merges them
+        into the store: the store this engine opened is the generation the
+        latest seen snapshot names, so it holds none of them (a crash
+        after the wave's own store merge left only files no committed
+        generation names), and the heal commit names the new generation.
+        Audit tables (order/outcomes/metrics/lineage) committed after seen
+        may still miss wave W's rows; they are observability, not inputs,
+        so a gap there cannot corrupt the crawl.
         """
         f_latest = self.store.latest("frontier")
         if f_latest is None:
@@ -725,32 +693,16 @@ class CrawlEngine:
             missing = missing.join(seen.select("url_hash"), "url_hash", "left_anti")
         missing = missing.persist()
         n = missing.count()
-        if n and self._seen_store is not None:  # superset invariant: store first
-            # cuckoo insert is NOT idempotent, and the crash may have
-            # landed on EITHER side of the wave's pre-commit store merge —
-            # re-merging keys the store already holds would add duplicate
-            # fingerprints (occupancy creep, and a later retract delete()
-            # would remove only one copy). Insert only keys the store does
-            # not already hold; skipping a false positive is safe because
-            # the key is committed to seen right below, so the exact
-            # anti-join keeps covering it (the probe stage runs before the
-            # fold's writes — stage barrier — so probes always read
-            # pre-merge files).
-            self._store_merge(
-                missing.select("url_hash").filter(
-                    ~self._seen_store.might_contain_col(F.col("url_hash"))
-                )
-            )
+        if n and self._seen_store is not None:
+            self._store_merge(missing.select("url_hash"))
         # commit even when n == 0 so seen's wave catches up — otherwise a
         # crashed zero-discovery wave would re-trigger this scan on every
         # resume forever
         prev_total = (s_latest or {}).get("meta", {}).get("total") or 0
-        sid = self.store.commit(
-            "seen", missing, mode="append", wave=f_latest["wave"],
-            meta={"added": n, "total": prev_total + n, "healed": True},
+        self._commit_seen(
+            missing, "append", f_latest["wave"],
+            {"added": n, "total": prev_total + n, "healed": True},
         )
-        if self._seen_store is not None:
-            self._seen_store.set_watermark(sid)
         missing.unpersist()
         return n
 
@@ -759,7 +711,9 @@ class CrawlEngine:
         seed bootstrap is skipped and the loop continues from the last
         committed wave — the resume contract (including the crash-window
         heal: a run killed between a wave's frontier and seen commits
-        resumes without double-numbering its discovered URLs)."""
+        resumes without double-numbering its discovered URLs). Resume
+        with a new engine: one whose wave raised may hold a store
+        generation ahead of the committed seen set."""
         if self.last_wave() is None:
             assert seeds is not None, "first run needs a seed list"
             self.bootstrap(seeds)

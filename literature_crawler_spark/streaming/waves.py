@@ -49,29 +49,43 @@ def seed_ingest_stream(
         seen = store.read(spark, "seen")
         new = fr.dedup_against_seen(spark, cand, seen)
         frontier = store.read(spark, "frontier")
-        max_seq = 0
+        # the totals the wave loop reads from the manifests; the scans
+        # only run on a store written before the fields
+        f_meta = (store.latest("frontier") or {}).get("meta", {})
+        s_meta = (store.latest("seen") or {}).get("meta", {})
+        start, pending, total = 0, f_meta.get("pending"), s_meta.get("total")
         if frontier is not None:
-            max_seq = (frontier.agg(F.max("seq")).collect()[0][0] or 0) + 1
+            prev_max = f_meta.get("max_seq")
+            if prev_max is None:
+                prev_max = frontier.agg(F.max("seq")).collect()[0][0] or 0
+            start = prev_max + 1
+            if pending is None:
+                pending = frontier.filter(F.col("status") == "pending").count()
+        if total is None:
+            total = 0 if seen is None else seen.count()
         rows = new.select(
             "canon_url", "url_hash", "bucket", "host",
             F.lit(0).alias("priority"),
-            (F.lit(max_seq) + F.monotonically_increasing_id()).alias("seq"),
+            (F.lit(start) + F.monotonically_increasing_id()).alias("seq"),
             F.lit(-1).alias("wave"), F.lit("pending").alias("status"),
         ).persist()  # count + 2 commits below read ONE materialization
         try:
-            n = rows.count()
+            n, max_seq = rows.agg(F.count("*"), F.max("seq")).collect()[0]
             if n == 0:
                 return
             # MERGE delta (new rows only) — the streaming twin of the wave
             # loop's O(scheduled + new) commits; no full-frontier rewrite
             store.commit(
                 "frontier", rows, mode="merge", wave=-1,
-                meta={"stream_batch": batch_id, "delta_rows": n},
+                meta={
+                    "stream_batch": batch_id, "delta_rows": n,
+                    "pending": (pending or 0) + n, "max_seq": max_seq,
+                },
                 merge_key=["url_hash"],
             )
             store.commit(
                 "seen", rows.select("url_hash", "canon_url", "bucket", "wave"),
-                mode="append", wave=-1, meta={"added": n},
+                mode="append", wave=-1, meta={"added": n, "total": total + n},
             )
         finally:
             rows.unpersist()

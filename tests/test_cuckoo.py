@@ -24,6 +24,20 @@ def _hashes(n, seed=7):
     return rng.integers(-(2**63), 2**63 - 1, size=n, dtype=np.int64)
 
 
+def _probe(st, df):
+    """The store's verdict for every url_hash of df, in the driver."""
+    h = np.array([r.url_hash for r in df.select("url_hash").collect()], dtype=np.int64)
+    return st.probe_np(h)
+
+
+def _occupancy(st):
+    """Occupied slots over the files the store's generation names."""
+    return sum(
+        int(np.count_nonzero(np.fromfile(p, dtype=np.uint16)))
+        for p in st.paths().values()
+    )
+
+
 # ------------------------------------------------------------- unit ----
 class TestTable:
     def test_no_false_negatives_at_high_load(self):
@@ -86,17 +100,14 @@ class TestStore:
         st = BucketedCuckooStore.create(str(tmp_path / "c1"), expected_items=40_000)
         counts = st.merge(keys_df)
         assert sum(counts.values()) == 20_000
-        probed = keys_df.withColumn("hit", st.might_contain_col(F.col("url_hash")))
-        assert probed.filter(~F.col("hit")).count() == 0  # no false negatives
+        assert _probe(st, keys_df).all()  # no false negatives
+        assert _occupancy(st) == 20_000
 
     def test_probe_fpr_on_fresh_keys(self, spark, keys_df, tmp_path):
         st = BucketedCuckooStore.create(str(tmp_path / "c2"), expected_items=40_000)
         st.merge(keys_df)
         fresh = spark.range(100_000, 200_000).select(F.xxhash64("id").alias("url_hash"))
-        hits = fresh.withColumn("hit", st.might_contain_col(F.col("url_hash"))).filter(
-            "hit"
-        ).count()
-        assert hits / 100_000 < 2e-3
+        assert _probe(st, fresh).mean() < 2e-3
 
     def test_delete_enables_reinsert_membership_flip(self, spark, keys_df, tmp_path):
         st = BucketedCuckooStore.create(str(tmp_path / "c3"), expected_items=40_000)
@@ -106,13 +117,9 @@ class TestStore:
         removed = st.delete(victims)
         assert sum(removed.values()) == victims.count()
         # kept keys still all present; victims (mostly) retractable
-        assert kept.withColumn("h", st.might_contain_col(F.col("url_hash"))).filter(
-            ~F.col("h")
-        ).count() == 0
-        vic_hits = victims.withColumn(
-            "h", st.might_contain_col(F.col("url_hash"))
-        ).filter("h").count()
-        assert vic_hits / max(victims.count(), 1) < 0.01
+        assert _probe(st, kept).all()
+        assert _probe(st, victims).mean() < 0.01
+        assert _occupancy(st) == 20_000 - victims.count()
 
     def test_overflow_raises_and_preserves_files(self, spark, tmp_path):
         st = BucketedCuckooStore.create(
@@ -124,31 +131,54 @@ class TestStore:
             st.merge(
                 spark.range(1000, 60_000).select(F.xxhash64("id").alias("url_hash"))
             )
-        # the pre-overflow contents are untouched (files were not replaced)
-        assert small.withColumn("h", st.might_contain_col(F.col("url_hash"))).filter(
-            ~F.col("h")
-        ).count() == 0
+        # the generation is not advanced: the pre-overflow files still
+        # hold every key and nothing else
+        assert _probe(st, small).all()
+        assert _occupancy(st) == 60
 
-    def test_open_roundtrip_and_watermark(self, tmp_path):
-        root = str(tmp_path / "c5")
-        st = BucketedCuckooStore.create(root, expected_items=1000, n_buckets=8)
-        st.set_watermark(17)
-        st2 = BucketedCuckooStore.open(root)
-        assert st2 is not None
-        assert (st2.n_buckets, st2.bucket_rows) == (st.n_buckets, st.bucket_rows)
-        assert st2.watermark() == 17
-
-    def test_open_rejects_bloom_store_root(self, tmp_path):
-        """A root left by the retired Bloom store (its ``_params.json`` has
-        no ``kind``) must read as absent, so the engine recreates it."""
+    def test_generations_are_immutable_and_adoptable(self, spark, keys_df, tmp_path):
+        """merge and delete write new files and never touch the files of
+        an earlier generation; the descriptor round-trips through JSON
+        and ``adopt`` probes exactly what the original probes."""
         import json
+        import os
 
-        root = tmp_path / "c6"
-        root.mkdir()
-        (root / "_params.json").write_text(
-            json.dumps({"n_buckets": 64, "n_bits": 16384, "k": 7})
+        root = str(tmp_path / "c5")
+        st = BucketedCuckooStore.create(root, expected_items=40_000, n_buckets=8)
+        first = keys_df.filter(F.col("url_hash") % 2 == 0)
+        st.merge(first)
+        gen1 = st.descriptor()
+        before = {p: os.stat(p).st_mtime_ns for p in st.paths().values()}
+        st.merge(keys_df.filter(F.col("url_hash") % 2 != 0))
+        st.delete(first.limit(100))
+        assert st.descriptor()["gen"] == gen1["gen"] + 2
+        assert {p: os.stat(p).st_mtime_ns for p in before} == before
+        old = BucketedCuckooStore.adopt(root, json.loads(json.dumps(gen1)))
+        assert _occupancy(old) == first.count()
+        new = BucketedCuckooStore.adopt(root, json.loads(json.dumps(st.descriptor())))
+        assert (_probe(new, keys_df) == _probe(st, keys_df)).all()
+        assert _occupancy(new) == 20_000 - 100
+        # dropping the unnamed files leaves exactly the live generation
+        new.drop_unnamed()
+        assert sorted(os.listdir(root)) == sorted(
+            os.path.basename(p) for p in new.paths().values()
         )
-        assert BucketedCuckooStore.open(str(root)) is None
+
+    def test_retried_merge_has_single_occupancy(self, spark, keys_df, tmp_path):
+        """A merge re-run from the same parent descriptor (a retried fold)
+        reads the same immutable parent files, so it holds each key once,
+        like the first run, and leaves the first run's files untouched."""
+        root = str(tmp_path / "c6")
+        st = BucketedCuckooStore.create(root, expected_items=40_000)
+        st.merge(keys_df.filter(F.col("url_hash") % 3 == 0))
+        parent = st.descriptor()
+        delta = keys_df.filter(F.col("url_hash") % 3 != 0)
+        st.merge(delta)
+        retry = BucketedCuckooStore.adopt(root, parent)
+        retry.merge(delta)
+        assert retry.gen > st.gen and set(retry.files) == set(st.files)
+        assert _occupancy(retry) == _occupancy(st) == 20_000
+        assert _probe(retry, keys_df).all() and _probe(st, keys_df).all()
 
 
 # ----------------------------------------------------------- engine ----
@@ -208,12 +238,8 @@ class TestEngineWiring:
         assert (
             eng.seen().filter(F.col("canon_url") == victim.canon_url).count() == 1
         )
-        probed = (
-            eng.frontier()
-            .filter(F.col("canon_url") == victim.canon_url)
-            .withColumn("h", eng._seen_store.might_contain_col(F.col("url_hash")))
-        )
-        assert probed.filter("h").count() == 1
+        probed = eng.frontier().filter(F.col("canon_url") == victim.canon_url)
+        assert _probe(eng._seen_store, probed).tolist() == [True]
         # next wave re-schedules the requeued row (same seq, new wave)
         next_wave = (eng.last_wave() or 0) + 1
         eng.run_wave(next_wave)
@@ -233,12 +259,8 @@ class TestEngineWiring:
         assert (
             eng.seen().filter(F.col("canon_url") == victim2.canon_url).count() == 0
         )
-        gone = (
-            eng.frontier()
-            .filter(F.col("canon_url") == victim2.canon_url)
-            .withColumn("h", eng._seen_store.might_contain_col(F.col("url_hash")))
-        )
-        assert gone.filter("h").count() == 0
+        gone = eng.frontier().filter(F.col("canon_url") == victim2.canon_url)
+        assert _probe(eng._seen_store, gone).tolist() == [False]
 
         # nothing eligible: zeros, whether no key matches or no matched
         # row changes status (a pending row requeued)
@@ -300,13 +322,11 @@ class TestEngineWiring:
         assert got == want
 
     def test_adoption_refresh_capacity_is_bounded(self, spark, tmp_path):
-        """A stale store (watermark behind committed seen, e.g. runs
-        alternating use_bloom modes) rebuilds on adoption. The rebuild
-        must size from the ACTUAL key count — slot capacity is not a
-        fixed point of rows_for, so sizing from it doubled the table on
-        every restart with zero key growth."""
-        from pyspark.sql import functions as F
-
+        """Restarts adopt the store generation the latest seen snapshot
+        names, as is: no rebuild, so the capacity cannot drift across
+        restarts with zero key growth. A seen snapshot that names no
+        generation (written by a use_bloom=False engine) is rebuilt from
+        seen at the fresh-store size."""
         from literature_crawler_spark.plans.crawl import CrawlEngine
         from literature_crawler_spark.plans.state import SnapshotStore
         from literature_crawler_spark.sources import synthetic as syn
@@ -316,22 +336,18 @@ class TestEngineWiring:
         store = SnapshotStore(str(tmp_path / "alt"))
         eng = CrawlEngine(spark, store, pages, use_bloom="cuckoo", n_buckets=8)
         eng.run(seeds, max_waves=2)
-        rows0 = eng._seen_store.bucket_rows
-        sizes = []
+        desc = eng._seen_store.descriptor()
         for _ in range(4):
-            eng._seen_store.set_watermark(-1)  # force the refresh path
             eng = CrawlEngine(spark, store, pages, use_bloom="cuckoo", n_buckets=8)
-            sizes.append(eng._seen_store.bucket_rows)
-        assert set(sizes) == {sizes[0]}, f"capacity drifted across refreshes: {sizes}"
-        assert sizes[0] <= rows0
-        # superset invariant survives the rebuilds: every seen key probes true
-        miss = (
-            eng.seen()
-            .withColumn("h", eng._seen_store.might_contain_col(F.col("url_hash")))
-            .filter(~F.col("h"))
-            .count()
-        )
-        assert miss == 0
+            assert eng._seen_store.descriptor() == desc
+        CrawlEngine(spark, store, pages, use_bloom=False).run(max_waves=1)
+        assert "cuckoo" not in store.latest("seen")["meta"]
+        eng = CrawlEngine(spark, store, pages, use_bloom="cuckoo", n_buckets=8)
+        assert eng._seen_store.bucket_rows == desc["bucket_rows"]
+        assert eng._seen_store.gen > desc["gen"]
+        # the rebuilt store holds every seen key exactly once
+        assert _probe(eng._seen_store, eng.seen()).all()
+        assert _occupancy(eng._seen_store) == eng.seen().count()
 
     def test_auto_upgrades_to_cuckoo_past_broadcast_ceiling(
         self, spark, tmp_path, monkeypatch
@@ -355,7 +371,7 @@ class TestEngineWiring:
         eng.run(seeds, max_waves=2)
         # 25 seeds + wave-1 discoveries >> 30: the store must exist now
         assert isinstance(eng._seen_store, cuckoo_mod.BucketedCuckooStore)
-        assert eng._seen_store.watermark() is not None
+        assert store.latest("seen")["meta"]["cuckoo"] == eng._seen_store.descriptor()
 
         # resume in a fresh engine: the store is re-adopted, still cuckoo
         eng2 = CrawlEngine(spark, store, pages, use_bloom="auto", n_buckets=8)

@@ -2,6 +2,9 @@
 final state (FIXTURES.md invariant 4; reference analogue: frozen Redis
 crawl_list reload, nature_protocol_crawl.py:67-88)."""
 
+import os
+import shutil
+
 import numpy as np
 import pytest
 
@@ -115,11 +118,52 @@ def test_per_partition_lineage(spark, corpus, tmp_path):
         assert by_wave_kind.get((w, "dedup_bucket"), 0) == m["new_urls"]
 
 
+def _assert_store_is_seen(eng):
+    """The live store generation is the one the latest seen snapshot
+    names and holds exactly its keys: every seen key probes true, the
+    occupied slots equal the seen key count (no key held twice), and no
+    file the generation does not name is left in the store directory."""
+    st = eng._seen_store
+    assert eng.store.latest("seen")["meta"]["cuckoo"] == st.descriptor()
+    hashes = np.array(
+        [r.url_hash for r in eng.seen().select("url_hash").collect()], dtype=np.int64
+    )
+    assert st.probe_np(hashes).all()
+    occupied = sum(
+        int(np.count_nonzero(np.fromfile(p, dtype=np.uint16)))
+        for p in st.paths().values()
+    )
+    assert occupied == len(hashes)
+    assert sorted(os.listdir(st.root)) == sorted(
+        os.path.basename(p) for p in st.paths().values()
+    )
+
+
+def test_store_generation_tracks_seen(spark, corpus, tmp_path):
+    """Bootstrap, a wave and a forget-retract each commit seen with the
+    store generation that holds exactly its keys."""
+    from pyspark.sql import functions as F
+
+    eng = CrawlEngine(
+        spark, SnapshotStore(str(tmp_path / "gen")), corpus["pages"],
+        corpus["robots"], corpus["politeness"], use_bloom="cuckoo",
+    )
+    eng.bootstrap(corpus["seeds"])
+    _assert_store_is_seen(eng)
+    eng.run_wave(1)
+    _assert_store_is_seen(eng)
+    victim = eng.frontier().filter(F.col("status") == "fetched").limit(1).collect()[0]
+    out = eng.retract(spark.createDataFrame([(victim.canon_url,)], "url string"))
+    assert out["retracted"] == 1
+    _assert_store_is_seen(eng)
+
+
 def test_bucketed_bloom_staleness_remerge(spark, corpus, tmp_path):
-    """A pre-existing cuckoo seen store BEHIND the committed seen set
-    (interleaved runs with use_bloom=False) must be detected on engine
-    open and rebuilt — a stale store gives false negatives, re-crawling
-    seen URLs and appending duplicates to seen."""
+    """A seen snapshot written by a use_bloom=False engine names no store
+    generation, so a cuckoo engine opening it builds its store from seen
+    — the store left by the earlier cuckoo run is behind seen and would
+    give false negatives, re-crawling seen URLs and appending duplicates
+    to seen."""
 
     def mk(path, mode):
         return CrawlEngine(
@@ -135,13 +179,15 @@ def test_bucketed_bloom_staleness_remerge(spark, corpus, tmp_path):
     first.run(corpus["seeds"], max_waves=1)
     mid = mk(p, False)  # plain anti-join: seen advances, store does NOT
     mid.run(max_waves=1)
-    resumed = mk(p, "cuckoo")  # open must detect store-behind-seen
-    assert (
-        resumed._seen_store.watermark()
-        == resumed.store.latest("seen")["id"]
+    assert "cuckoo" not in mid.store.latest("seen")["meta"]
+    resumed = mk(p, "cuckoo")  # builds from seen: every seen key, once
+    hashes = np.array(
+        [r.url_hash for r in resumed.seen().select("url_hash").collect()], dtype=np.int64
     )
+    assert resumed._seen_store.probe_np(hashes).all()
     resumed.run(max_waves=1)
     assert _state(straight) == _state(resumed)
+    _assert_store_is_seen(resumed)
 
 
 def test_crash_window_heal(spark, corpus, tmp_path):
@@ -199,18 +245,14 @@ def test_crash_window_heal(spark, corpus, tmp_path):
     assert _state(resumed) == _state(straight)
 
 
-def test_crash_window_heal_cuckoo_single_copy(spark, corpus, tmp_path):
-    """The realistic crash lands AFTER the wave's store merge (store merge
-    runs before the seen commit), so the heal's keys are usually ALREADY
-    in the membership store. Cuckoo insert is not idempotent — a blind
-    re-merge would add a second fingerprint copy per key, and a later
-    retract delete() would remove only one of them, leaving a permanent
-    stale hit. The heal must therefore probe-filter its store delta:
-    after heal + fetch + forget, the store must MISS the key."""
-    import json
-    import os
-    import shutil
-
+def test_crash_window_heal_cuckoo_single_copy(spark, corpus, tmp_path, monkeypatch):
+    """The realistic crash lands AFTER the wave's store merge (the merge
+    runs right before the seen commit). Cuckoo insert is not idempotent —
+    a second fingerprint copy per key would survive a later retract
+    delete(), leaving a permanent stale hit. The merge wrote a generation
+    no seen snapshot names, so the resumed engine adopts the previous
+    one, and the heal's unfiltered merge holds each key once: after
+    heal + fetch + forget, the store must MISS the key."""
     from pyspark.sql import functions as F
 
     def mk(path):
@@ -221,17 +263,18 @@ def test_crash_window_heal_cuckoo_single_copy(spark, corpus, tmp_path):
 
     p = str(tmp_path / "cw_ck")
     crashed = mk(p)
-    crashed.run(corpus["seeds"], max_waves=2)
-    tdir = os.path.join(p, "seen")
-    with open(os.path.join(tdir, "_LATEST")) as f:
-        sid = int(f.read().strip())
-    with open(os.path.join(tdir, f"s{sid:06d}.json")) as f:
-        dropped = json.load(f)
-    assert dropped["meta"].get("added", 0) > 0
-    os.unlink(os.path.join(tdir, f"s{sid:06d}.json"))
-    shutil.rmtree(os.path.join(tdir, f"s{sid:06d}"), ignore_errors=True)
-    with open(os.path.join(tdir, "_LATEST"), "w") as f:
-        f.write(str(sid - 1))
+    crashed.run(corpus["seeds"], max_waves=1)
+    real_commit = SnapshotStore.commit
+
+    def commit(self, table, df, *args, **kwargs):
+        if table == "seen":
+            raise RuntimeError("killed between the store merge and the seen commit")
+        return real_commit(self, table, df, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotStore, "commit", commit)
+    with pytest.raises(RuntimeError, match="killed"):
+        crashed.run_wave(2)
+    monkeypatch.setattr(SnapshotStore, "commit", real_commit)
 
     resumed = mk(p)
     healed_keys = (
@@ -241,12 +284,11 @@ def test_crash_window_heal_cuckoo_single_copy(spark, corpus, tmp_path):
         .collect()
     )
     assert healed_keys  # the crash window is open
-    # every healed key is already in the store (merged before the crash)
-    pre = resumed._seen_store.probe_np(
-        np.array([r.url_hash for r in healed_keys], dtype=np.int64)
-    )
-    assert pre.all()
+    # the resumed store is seen's generation, not the crashed merge's
+    assert resumed._seen_store.descriptor() == resumed.store.latest("seen")["meta"]["cuckoo"]
+    assert resumed._seen_store.descriptor() != crashed._seen_store.descriptor()
     resumed.run(max_waves=1)  # heal + fetch (politeness-budgeted) pending rows
+    _assert_store_is_seen(resumed)
 
     # pick a healed key wave 3 actually fetched (the politeness budget
     # schedules only part of the backlog per wave) — it is now forgettable
@@ -467,8 +509,7 @@ def test_seen_compaction_preserves_state_and_bounds_dirs(spark, corpus, tmp_path
     """compact_seen_every folds the append-only seen table into a replace
     base on its own cadence; crawl state is identical to a plain run, the
     folded append dirs are physically reclaimed, and resume on top of the
-    compacted seen works (watermark advanced, no spurious rebuild)."""
-    import os
+    compacted seen works."""
 
     plain = _mk_engine(spark, corpus, str(tmp_path / "sc_plain"))
     plain.run(corpus["seeds"], max_waves=3)
@@ -492,3 +533,135 @@ def test_seen_compaction_preserves_state_and_bounds_dirs(spark, corpus, tmp_path
     )
     resumed.run(max_waves=1)
     assert _state(plain) == _state(resumed)
+
+
+# ------------------------------------------------------ kill anywhere ----
+
+# Wave 2's writes in order, with frontier and seen compaction due at wave 2.
+# "merge" is the store merge killed after its files are written, before
+# the store's descriptor advances; "commit:<table>" is killed right before
+# that commit, so "commit:seen" is the kill between the store merge and
+# the seen commit.
+WAVE2_WRITES = [
+    "commit:frontier", "commit:frontier", "merge", "commit:seen", "commit:seen",
+    "commit:order", "commit:outcomes", "commit:metrics", "commit:lineage",
+]
+
+
+class _Killed(RuntimeError):
+    pass
+
+
+def _kill_engine(spark, corpus, path):
+    return CrawlEngine(
+        spark, SnapshotStore(path), corpus["pages"], corpus["robots"],
+        corpus["politeness"], use_bloom="cuckoo", compact_every=2,
+        compact_seen_every=2,
+    )
+
+
+def _full_state(eng, skip_wave=None):
+    seen, order = _state(eng)
+    frontier = {(r.canon_url, r.seq, r.status) for r in eng.frontier().collect()}
+    return seen, frontier, [o for o in order if o[0] != skip_wave]
+
+
+@pytest.fixture
+def wave2_writes(monkeypatch):
+    """Record wave 2's writes; ``kill_at`` makes the k-th one raise."""
+    from literature_crawler_spark.operators.cuckoo import BucketedCuckooStore
+
+    real_commit = SnapshotStore.commit
+    real_fold = BucketedCuckooStore._fold_by_bucket
+    rec = {"on": False, "events": [], "kill_at": None}
+
+    def step(name):
+        if rec["on"]:
+            rec["events"].append(name)
+            if len(rec["events"]) - 1 == rec["kill_at"]:
+                raise _Killed(name)
+
+    def commit(self, table, df, *args, **kwargs):
+        step(f"commit:{table}")
+        return real_commit(self, table, df, *args, **kwargs)
+
+    def fold(self, *args, **kwargs):
+        out = real_fold(self, *args, **kwargs)
+        step("merge")
+        return out
+
+    monkeypatch.setattr(SnapshotStore, "commit", commit)
+    monkeypatch.setattr(BucketedCuckooStore, "_fold_by_bucket", fold)
+    return rec
+
+
+@pytest.fixture(scope="module")
+def kill_base(spark, corpus, tmp_path_factory):
+    """The state after wave 1 (each kill case resumes a copy of it) and
+    the uninterrupted run to wave 3."""
+    base = str(tmp_path_factory.mktemp("kill_base"))
+    _kill_engine(spark, corpus, base).run(corpus["seeds"], max_waves=1)
+    straight = str(tmp_path_factory.mktemp("kill_straight"))
+    shutil.copytree(base, straight, dirs_exist_ok=True)
+    eng = _kill_engine(spark, corpus, straight)
+    eng.run(max_waves=2)
+    return base, _full_state(eng, skip_wave=2)
+
+
+@pytest.mark.parametrize("k", range(len(WAVE2_WRITES)), ids=lambda k: f"{k}-{WAVE2_WRITES[k]}")
+def test_kill_anywhere_in_wave_resumes(spark, corpus, tmp_path, kill_base, wave2_writes, k):
+    """Kill wave 2 at any of its writes, resume with a new engine: the
+    seen set, the frontier and every other wave's crawl order equal the
+    uninterrupted run's (the killed wave's audit rows may be lost), and
+    the store is the committed seen generation, each key held once."""
+    base, want = kill_base
+    p = str(tmp_path / "killed")
+    shutil.copytree(base, p)
+    wave2_writes.update(on=True, kill_at=k)
+    with pytest.raises(_Killed):
+        _kill_engine(spark, corpus, p).run_wave(2)
+    assert wave2_writes["events"] == WAVE2_WRITES[: k + 1]
+    wave2_writes["on"] = False
+    spark.catalog.clearCache()
+
+    resumed = _kill_engine(spark, corpus, p)
+    resumed.run(max_waves=3 - resumed.last_wave())
+    assert _full_state(resumed, skip_wave=2) == want
+    _assert_store_is_seen(resumed)
+
+
+def test_two_phase_choice_survives_restart(spark, tmp_path):
+    """The hot-host backlog estimate behind two_phase='auto' rides the
+    frontier manifests: an engine resumed after wave 1 makes the same
+    two_phase choice as an uninterrupted one, here on a hub page whose
+    100 same-host links put the host's backlog over
+    AUTO_TWO_PHASE_RATIO x budget. A requeue retract keeps the estimate."""
+    from literature_crawler_spark.plans.crawl import AUTO_TWO_PHASE_RATIO
+
+    hub = "https://h0.example.org/hub"
+    pages = spark.createDataFrame(
+        [(hub, "h0.example.org", [f"https://h0.example.org/p{i}" for i in range(100)], "", "i0")],
+        "url string, host string, links array<string>, caption string, image_id string",
+    )
+    seeds = spark.createDataFrame([(hub, 0, 0)], "url string, priority int, seq long")
+
+    def mk(path):
+        return CrawlEngine(spark, SnapshotStore(path), pages, default_budget=1)
+
+    straight = mk(str(tmp_path / "straight"))
+    straight.run(seeds, max_waves=1)
+    assert straight._hot_backlog["h0.example.org"] >= AUTO_TWO_PHASE_RATIO
+    assert straight._use_two_phase()
+    p = str(tmp_path / "resumed")
+    mk(p).run(seeds, max_waves=1)
+    resumed = mk(p)
+    assert resumed._use_two_phase() == straight._use_two_phase()
+    straight.run_wave(2)
+    resumed.run_wave(2)
+    assert resumed._hot_backlog == straight._hot_backlog
+    assert resumed._use_two_phase() == straight._use_two_phase()
+    assert _state(resumed) == _state(straight)
+
+    out = resumed.retract(spark.createDataFrame([(hub,)], "url string"), requeue=True)
+    assert out["requeued"] == 1
+    assert mk(p)._hot_backlog == straight._hot_backlog

@@ -72,6 +72,36 @@ def test_seed_ingest_is_idempotent_for_seen_urls(spark, tmp_path):
     assert store.read(spark, "frontier").count() == 1
 
 
+def test_seed_ingest_then_waves_keep_manifest_totals(spark, tmp_path):
+    """Stream ingest writes the manifest fields the wave loop reads (seen
+    ``total``, frontier ``pending`` and ``max_seq``), so the seen total
+    stays equal to the seen row count after an engine wave."""
+    from literature_crawler_spark.plans.crawl import CrawlEngine
+    from literature_crawler_spark.sources import synthetic as syn
+
+    src = tmp_path / "src"
+    src.mkdir()
+    seeds = syn.generate_seeds(spark, 14, 300, 8).collect()
+    _write_seed_file(str(src), "seeds.txt", [r.url for r in seeds])
+    store = SnapshotStore(str(tmp_path / "state"))
+    stream = (
+        spark.readStream.schema(T.StructType([T.StructField("url", T.StringType())]))
+        .text(str(src))
+        .withColumnRenamed("value", "url")
+    )
+    q = waves.seed_ingest_stream(stream, store, None, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    frontier_meta = store.latest("frontier")["meta"]
+    frontier = store.read(spark, "frontier")
+    assert frontier_meta["pending"] == frontier.count()
+    assert frontier_meta["max_seq"] == frontier.agg(F.max("seq")).collect()[0][0]
+
+    pages = syn.generate_pages(spark, 300, 8, with_images=False)
+    eng = CrawlEngine(spark, store, pages)
+    eng.run(max_waves=1)
+    assert store.latest("seen")["meta"]["total"] == eng.seen().count()
+
+
 def test_host_rate_monitor_windows(spark, tmp_path):
     src = tmp_path / "ev"
     src.mkdir()

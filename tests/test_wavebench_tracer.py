@@ -43,3 +43,22 @@ def test_tracer_patches_and_restores_entry_points(spark):
     after = [getattr(owner, attr) for owner, attr in PATCHED]
     assert all(d is not b for d, b in zip(during, before))
     assert all(a is b for a, b in zip(after, before))
+
+
+def test_recrawl_resume_tiny_run():
+    """The benchmark program end to end on its tiny corpus: kill a wave,
+    restart, heal, retract, each checked against the oracle. The killed
+    wave's audit rows are a documented loss, so one failed wave is
+    allowed."""
+    import json
+    import subprocess
+
+    cmd = [sys.executable, os.path.join(WAVEBENCH, "run.py"), "--workload", "recrawl_resume",
+           "--tiny", "--seconds", "1", "--seed", "7"]
+    p = subprocess.run(cmd, cwd=os.path.dirname(WAVEBENCH), capture_output=True, text=True,
+                       timeout=900)
+    assert p.returncode == 0, p.stderr[-3000:]
+    last = json.loads(p.stdout.strip().splitlines()[-1])
+    assert set(last) == {"correct", "attempted", "failed", "metrics"}, last
+    assert last["correct"], p.stdout
+    assert last["failed"] <= 1, p.stdout
