@@ -7,7 +7,10 @@ re-expressed as one DataFrame pass):
     (join against the pages corpus) -> extract links (explode) ->
     canonicalize -> first-seen dedup -> membership test vs seen ->
     robots filter -> assign dense seq -> commit snapshots (frontier,
-    seen, order, outcomes, metrics, lineage)
+    seen, order, metrics, lineage)
+
+The ``order`` table is the crawl log: one row per scheduled URL with its
+wave, seq, host and fetch status (``fetched``/``missing``).
 
 The stages that later jobs read more than once (scheduled, fetched, the
 deduplicated candidates, the seq partitioning and the new frontier rows)
@@ -43,12 +46,12 @@ from literature_crawler_spark.plans.state import SnapshotStore
 
 FRONTIER_COLS = ["canon_url", "url_hash", "bucket", "host", "priority", "seq", "wave", "status"]
 
-# two_phase='auto': engage the supernode pre-rank when a tracked host's
+# two_phase scheduling: engage the supernode pre-rank when a tracked host's
 # estimated pending backlog reaches this many times its per-wave budget —
 # the single-window-task sort is ~backlog log backlog, so 32x budget is
 # where it visibly outweighs the extra pending shuffle (politeness.py:44-53).
 AUTO_TWO_PHASE_RATIO = 32
-# bound on the driver-side hot-host dict (auto two_phase estimate)
+# bound on the driver-side hot-host dict (two_phase estimate)
 MAX_TRACKED_HOSTS = 10_000
 
 
@@ -114,8 +117,6 @@ class CrawlEngine:
         use_bloom: str | bool = "auto",
         fetcher=None,
         compact_every: int | None = 8,
-        two_phase: bool | str = "auto",
-        expire_on_compact: bool = True,
         compact_seen_every: int | None = 32,
     ) -> None:
         self.spark = spark
@@ -134,12 +135,10 @@ class CrawlEngine:
         self.default_budget = default_budget
         self.n_buckets = n_buckets
         # fold the frontier's merge-delta chain back into a replace base
-        # every N waves (Iceberg-style table maintenance);
-        # expire_on_compact then reclaims the folded pre-base snapshots
-        # (expire-snapshots) so frontier storage is O(frontier), not
-        # O(frontier x compactions). Turn off to keep full time travel.
+        # every N waves (Iceberg-style table maintenance), then reclaim the
+        # folded pre-base snapshots (expire-snapshots) so frontier storage
+        # is O(frontier), not O(frontier x compactions)
         self.compact_every = compact_every
-        self.expire_on_compact = expire_on_compact
         # seen is append-only (one snapshot dir per wave); folding it into
         # a replace base bounds the reader's union width (file listing /
         # planning cost at 10^4+ waves) at the price of an O(seen) rewrite
@@ -183,9 +182,9 @@ class CrawlEngine:
         # paths produce the identical fetched set on the synthetic corpus
         # (tests/test_fetch.py).
         self.fetcher = fetcher
-        # two_phase scheduling (pol.schedule_wave): 'auto' turns the
-        # supernode pre-rank on only when a tracked host's estimated
-        # pending backlog exceeds AUTO_TWO_PHASE_RATIO x its budget —
+        # two_phase scheduling (pol.schedule_wave): the supernode pre-rank
+        # is on only when a tracked host's estimated pending backlog
+        # exceeds AUTO_TWO_PHASE_RATIO x its budget —
         # the regime where a single per-host window task becomes the
         # Amdahl cap (politeness.py:44-53). The estimate comes from the
         # per-wave new-URL counts of hosts that net-grow (> budget new
@@ -195,7 +194,6 @@ class CrawlEngine:
         # never O(all hosts).
         # The estimate rides every frontier manifest, so a resumed engine
         # makes the same choice as an uninterrupted one.
-        self.two_phase = two_phase
         self._hot_backlog: dict[str, int] = dict(
             (self.store.latest("frontier") or {}).get("meta", {}).get("hot_backlog", {})
         )
@@ -367,7 +365,8 @@ class CrawlEngine:
         return self.store.read(self.spark, "frontier")
 
     def crawl_order(self) -> DataFrame | None:
-        return self.store.read(self.spark, "order")
+        order = self.store.read(self.spark, "order")
+        return None if order is None else order.select("wave", "seq", "host", "canon_url")
 
     def last_wave(self) -> int | None:
         m = self.store.latest("frontier")
@@ -401,13 +400,11 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- wave ----
     def _use_two_phase(self) -> bool:
-        if self.two_phase == "auto":
-            cut = AUTO_TWO_PHASE_RATIO * self.default_budget
-            return any(v >= cut for v in self._hot_backlog.values())
-        return bool(self.two_phase)
+        cut = AUTO_TWO_PHASE_RATIO * self.default_budget
+        return any(v >= cut for v in self._hot_backlog.values())
 
     def _update_hot_backlog(self, new_rows: DataFrame, n_new: int) -> None:
-        """Maintain the bounded hot-host backlog estimate (auto two_phase).
+        """Maintain the bounded hot-host backlog estimate (two_phase).
 
         Hosts gaining more than one budget of NEW pending URLs in a wave
         net-grow (they drain at most budget/wave), so only those enter the
@@ -448,8 +445,8 @@ class CrawlEngine:
         # Observation on the fence's own job.
 
         # 1. politeness: per-host quota ranking (one shuffle on host);
-        #    two_phase='auto' engages the supernode pre-rank only when a
-        #    tracked host's backlog estimate crosses the ratio cut
+        #    the supernode pre-rank engages only when a tracked host's
+        #    backlog estimate crosses the ratio cut
         obs_sched = Observation()
         scheduled = pol.schedule_wave(
             pending, self.politeness, self.default_budget,
@@ -552,9 +549,11 @@ class CrawlEngine:
 
         # 6. commit snapshots: frontier (MERGE delta: only the status flips
         #    of scheduled rows + newly discovered rows — O(scheduled + new)
-        #    per wave, never a full-frontier rewrite), seen/order/outcomes/
-        #    metrics (append). The reader reconciles last-writer-wins on
-        #    url_hash; periodic compaction bounds the delta chain.
+        #    per wave, never a full-frontier rewrite), seen/order/metrics/
+        #    lineage (append). The reader reconciles last-writer-wins on
+        #    url_hash; periodic compaction bounds the delta chain. The
+        #    fetched fence gives each scheduled row its fetch status, which
+        #    both the frontier delta and the order log carry.
         outcome = fetched.select(
             *FRONTIER_COLS[:-1],
             F.when(F.col("page_url").isNotNull(), "fetched").otherwise("missing").alias("status"),
@@ -569,19 +568,17 @@ class CrawlEngine:
         if pending_before is None:
             pending_before = pending.count()
         n_pending_next = n_new + (pending_before - n_scheduled)
+        self._update_hot_backlog(new_rows, n_new)
         frontier_meta = {
             "pending": n_pending_next, "delta_rows": n_scheduled + n_new,
-            "max_seq": max_seq + n_new,
+            "max_seq": max_seq + n_new, "hot_backlog": self._hot_backlog,
         }
-        if self.two_phase == "auto":
-            self._update_hot_backlog(new_rows, n_new)
-            frontier_meta["hot_backlog"] = self._hot_backlog
         self.store.commit(
             "frontier", frontier_delta, mode="merge", wave=wave,
             meta=frontier_meta, merge_key=["url_hash"],
         )
         if self.compact_every and wave % self.compact_every == 0:
-            if self.store.compact("frontier") is not None and self.expire_on_compact:
+            if self.store.compact("frontier") is not None:
                 # reclaim the folded pre-base history (Iceberg
                 # expire-snapshots): without this, a long crawl's frontier
                 # storage grows by a full table copy per compaction
@@ -595,17 +592,12 @@ class CrawlEngine:
         )
         if self.compact_seen_every and wave % self.compact_seen_every == 0:
             # the compacted base copies the store descriptor with the meta
-            if self.store.compact("seen") is not None and self.expire_on_compact:
+            if self.store.compact("seen") is not None:
                 self.store.expire_snapshots("seen")
         self.store.commit(
             "order",
-            scheduled.select(F.lit(wave).alias("wave"), "seq", "host", "canon_url"),
+            outcome.select(F.lit(wave).alias("wave"), "seq", "host", "canon_url", "status"),
             mode="append", wave=wave, meta={"scheduled": n_scheduled},
-        )
-        self.store.commit(
-            "outcomes",
-            outcome.select("url_hash", "canon_url", F.lit(wave).alias("wave"), "status"),
-            mode="append", wave=wave,
         )
         metrics = {
             "wave": wave, "scheduled": n_scheduled, "fetched": n_fetched,
@@ -674,7 +666,7 @@ class CrawlEngine:
         latest seen snapshot names, so it holds none of them (a crash
         after the wave's own store merge left only files no committed
         generation names), and the heal commit names the new generation.
-        Audit tables (order/outcomes/metrics/lineage) committed after seen
+        Audit tables (order/metrics/lineage) committed after seen
         may still miss wave W's rows; they are observability, not inputs,
         so a gap there cannot corrupt the crawl.
         """

@@ -21,7 +21,7 @@ METRIC_TYPES = [
     ("wave", "int"), ("scheduled", "bigint"), ("fetched", "bigint"),
     ("new_urls", "bigint"), ("pending_next", "bigint"),
 ]
-TABLES = ("frontier", "seen", "order", "outcomes", "metrics", "lineage")
+TABLES = ("frontier", "seen", "order", "metrics", "lineage")
 
 
 @pytest.fixture(scope="module")

@@ -211,6 +211,20 @@ def test_bench_frontier_legs_smoke(spark, monkeypatch):
     assert large["clean_reps"] == {"cuckoo": 3, "shuffle_antijoin": 2}
 
 
+def test_bench_scaling_pair_smoke():
+    """bench.py's N -> 4N scaling pair runs both leg processes through the
+    @READY/@REP/@CALIB protocol on a small input and returns every key
+    the artifact's scaling block reads."""
+    bench = _load_bench()
+    p = bench.run_pair((1, None), (2, None), n_urls=20_000, want_clean=1,
+                       max_rounds=2, sleep_s=0)
+    for leg in (p["small"], p["large"]):
+        assert {"rate", "rate_median", "calib_loops_per_sec", "seen"} <= leg.keys()
+        assert leg["seen"] == 40_000
+    assert p["small"]["master"] == "local[1]" and p["large"]["master"] == "local[2]"
+    assert p["eff_paired_median"] > 0
+
+
 def test_bench_stdout_line_always_fits():
     """The bench's stdout line is cut in stages; an artifact still too
     long after every staged cut prints only the headline metric and the

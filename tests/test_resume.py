@@ -64,7 +64,7 @@ def test_rollback_then_rerun(spark, corpus, tmp_path):
 
     # rewind every state table to its wave-1 snapshot, then re-run wave 2
     store = eng.store
-    for table in ("frontier", "seen", "order", "outcomes", "metrics", "lineage"):
+    for table in ("frontier", "seen", "order", "metrics", "lineage"):
         keep = [m["id"] for m in store.snapshots(table) if (m["wave"] or 0) <= 1]
         store.truncate_after(table, max(keep))
     eng2 = _mk_engine(spark, corpus, p)
@@ -81,23 +81,37 @@ def test_compaction_preserves_state(spark, corpus, tmp_path):
     plain.run(corpus["seeds"], max_waves=3)
 
     p = str(tmp_path / "cmp")
-    # expiry off: this test asserts the FULL snapshot history (bootstrap
-    # base + compaction base both present); the default expiry path is
-    # covered by test_engine_compaction_expires_folded_deltas
     eng = CrawlEngine(
         spark, SnapshotStore(p), corpus["pages"], corpus["robots"],
-        corpus["politeness"], compact_every=2, expire_on_compact=False,
+        corpus["politeness"], compact_every=2,
     )
     eng.run(corpus["seeds"], max_waves=2)
-    modes = [m["mode"] for m in eng.store.snapshots("frontier")]
-    assert modes.count("replace") >= 2, modes  # bootstrap base + compaction
+    # wave 2's compaction is the latest frontier snapshot, a replace base
+    latest = eng.store.latest("frontier")
+    assert latest["mode"] == "replace" and "compacted_from" in latest["meta"], latest
     # restart on the compacted base and finish
     eng2 = CrawlEngine(
         spark, SnapshotStore(p), corpus["pages"], corpus["robots"],
-        corpus["politeness"], compact_every=2, expire_on_compact=False,
+        corpus["politeness"], compact_every=2,
     )
     eng2.run(max_waves=1)
     assert _state(plain) == _state(eng2)
+
+
+def test_order_log_carries_fetch_status(spark, corpus, tmp_path):
+    """The order table is the crawl log: each wave's scheduled rows with
+    their fetch status, whose counts equal the wave's metrics."""
+    eng = _mk_engine(spark, corpus, str(tmp_path / "log"))
+    metrics = eng.run(corpus["seeds"], max_waves=2)
+    counts = {
+        (r.wave, r.status): r["count"]
+        for r in eng.store.read(spark, "order").groupBy("wave", "status").count().collect()
+    }
+    assert {s for _, s in counts} <= {"fetched", "missing"}
+    for m in metrics:
+        assert counts.get((m["wave"], "fetched"), 0) == m["fetched"]
+        assert counts.get((m["wave"], "missing"), 0) == m["missing"]
+    assert eng.crawl_order().columns == ["wave", "seq", "host", "canon_url"]
 
 
 def test_per_partition_lineage(spark, corpus, tmp_path):
@@ -475,8 +489,8 @@ def test_expire_keep_from_clamped_to_base(spark, tmp_path):
 
 def test_engine_compaction_expires_folded_deltas(spark, corpus, tmp_path):
     """compact_every folds the frontier's merge chain into a new base;
-    expire_on_compact (default) reclaims the folded deltas, and the crawl
-    result is identical to a never-compacting run."""
+    expiry reclaims the folded deltas, and the crawl result is identical
+    to a never-compacting run."""
     import os
 
     p = str(tmp_path / "cex")
@@ -544,7 +558,7 @@ def test_seen_compaction_preserves_state_and_bounds_dirs(spark, corpus, tmp_path
 # the seen commit.
 WAVE2_WRITES = [
     "commit:frontier", "commit:frontier", "merge", "commit:seen", "commit:seen",
-    "commit:order", "commit:outcomes", "commit:metrics", "commit:lineage",
+    "commit:order", "commit:metrics", "commit:lineage",
 ]
 
 
